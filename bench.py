@@ -160,7 +160,8 @@ def _enc_sec(v: float):
         return int(round(v))
     if v >= 1:
         return round(v, 1)
-    return round(v, 2)
+    # floor at the printed resolution: a query that ran never prints 0.0
+    return max(0.01, round(v, 2))
 
 
 def _timed_pass(spark, sf_dir: str, warm: bool = False, only: list[str] | None = None) -> dict[str, float]:
@@ -352,8 +353,23 @@ def _parse_only() -> list[str] | None:
     return names
 
 
+def _conc_passes() -> int:
+    """``SPARK_GRAFT_BENCH_CONC_PASSES`` (default 2): concurrent passes
+    whose better wall is the headline; at least one must run."""
+    raw = os.environ.get("SPARK_GRAFT_BENCH_CONC_PASSES", "2")
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise SystemExit(f"SPARK_GRAFT_BENCH_CONC_PASSES={raw!r}: expected an integer >= 1")
+    return n
+
+
 def main() -> None:
     only30 = _parse_only()
+    # validated before the sequential passes, which take minutes
+    conc_passes = _conc_passes()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = get_spark("bench")
@@ -466,7 +482,6 @@ def main() -> None:
     # the full workload from the parquet inputs.
     conc_walls: list[float] = []
     trace: dict[str, tuple[float, float]] = {}
-    conc_passes = int(os.environ.get("SPARK_GRAFT_BENCH_CONC_PASSES", "2"))
     for _ in range(conc_passes):
         t0 = time.perf_counter()
         pass_trace: dict[str, tuple[float, float]] = {}

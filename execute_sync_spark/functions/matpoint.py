@@ -63,7 +63,14 @@ def _init_from_env() -> None:
     if raw.strip() == "all":
         DISABLED.update(_ALL_SITES)
         return
-    DISABLED.update(s.strip() for s in raw.split(",") if s.strip())
+    sites = {s.strip() for s in raw.split(",") if s.strip()}
+    unknown = sites - _ALL_SITES
+    if unknown:
+        raise ValueError(
+            f"SPARK_GRAFT_MAT_OFF: unknown site(s) {sorted(unknown)}; "
+            f"expected 'all' or labels from {sorted(_ALL_SITES)}"
+        )
+    DISABLED.update(sites)
 
 
 _init_from_env()

@@ -1,7 +1,8 @@
 """NDJSON document batches -> landing DataFrame.
 
 Spark-first ingest (SURVEY §3.1): the raw NDJSON is read distributed
-(``spark.read.text``), metadata fields are extracted JVM-side with a single
+(``spark.read.text``) or, for an in-memory page, shipped as one Arrow batch;
+metadata fields are extracted JVM-side with a single
 ``from_json`` over a metadata-only StructType (parse errors -> null struct ->
 row skipped, matching the reference's parse-skip path,
 /root/reference/src/cmd_sync.go:154-157), and the whole line is kept as the
@@ -53,8 +54,13 @@ def land_ndjson_lines(
     chunk_size: int | None = None,
     uppercase_keys: bool = False,
 ) -> DataFrame:
-    """Land an in-memory iterable of NDJSON lines (tests / small batches)."""
-    df = spark.createDataFrame([(l,) for l in lines if l.strip()], "value string")
+    """Land an in-memory iterable of NDJSON lines (one sync page).
+
+    The page goes to the JVM as one Arrow batch and plans as a
+    ``LocalTableScan``; a list of tuples would plan as a pickled Python RDD
+    (``Scan ExistingRDD``) that every job over the page re-reads."""
+    page = pd.DataFrame({"value": [l for l in lines if l.strip()]}, dtype=object)
+    df = spark.createDataFrame(page, "value string")
     return _land(df, batch_date, chunk_size, uppercase_keys)
 
 

@@ -89,7 +89,8 @@ def superseded_rows(landing: DataFrame) -> DataFrame:
     return landing.join(keys, D1_KEYS + ["batch_date"], "left_anti").select(*landing.columns)
 
 
-def prune_parquet(spark, path: str, mode: str = "join", partition_by: list[str] | None = None, file_format: str = "parquet") -> int:
+def prune_parquet(spark, path: str, mode: str = "join", partition_by: list[str] | None = None,
+                  file_format: str = "parquet", schema=None) -> int:
     """D3: compact a parquet landing directory to only-current copies.
 
     Parquet has no DELETE, so compaction is a rewrite — but a PARTITION-SCOPED
@@ -108,13 +109,17 @@ def prune_parquet(spark, path: str, mode: str = "join", partition_by: list[str] 
     landing sink) — rewriting a partitioned directory flat would leave later
     partitioned appends unreadable next to flat files. With
     ``partition_by=None`` (flat layout) the whole directory is one
-    "partition" and the rewrite is necessarily full.
+    "partition" and the rewrite is necessarily full. ``schema``, when given,
+    is the table's declared schema, so the read infers nothing.
     """
     import os
     import shutil
     import uuid
 
-    df = spark.read.format(file_format).load(path)
+    reader = spark.read.format(file_format)
+    if schema is not None:
+        reader = reader.schema(schema)
+    df = reader.load(path)
 
     if partition_by == ["type"] and mode == "join":
         # Scoped fast path for JOIN semantics only: the dirty-partition test
@@ -124,18 +129,18 @@ def prune_parquet(spark, path: str, mode: str = "join", partition_by: list[str] 
         # mode exists precisely to collapse those ties; window mode therefore
         # always takes the full rewrite.
         #
-        # Which partitions hold superseded rows? The distinct-type list is
-        # tiny (doc-type cardinality); the scan underneath is the same
-        # anti-join D3 preview uses, aggregated map-side to the type key.
-        dirty = [r.type for r in superseded_rows(df).select("type").distinct().collect()]
-        if not dirty:
+        # Which partitions hold superseded rows, and how many? One
+        # aggregate answers both: its groups are the dirty partitions (a
+        # tiny list, doc-type cardinality), and the rewrite keeps exactly
+        # the complement of superseded_rows (semi- vs anti-join on the same
+        # key set), so the sum of its counts is the rows removed.
+        superseded = superseded_rows(df).groupBy("type").count().collect()
+        if not superseded:
             return 0
-        scoped = df.filter(F.col("type").isin(dirty))
-        before = scoped.count()
-        kept = latest_all_versions(scoped, mode=mode)
+        dirty = [r["type"] for r in superseded]
+        kept = latest_all_versions(df.filter(F.col("type").isin(dirty)), mode=mode)
         tmp = f"{path.rstrip('/')}_pruned_{uuid.uuid4().hex[:8]}"
         kept.write.mode("overwrite").format(file_format).partitionBy("type").save(tmp)
-        after = spark.read.format(file_format).load(tmp).count()
         # Swap in every partition dir the rewrite PRODUCED, taking the dir
         # names from the tmp listing rather than formatting f"type={t}" from
         # raw values — Spark escapes special characters in partition values,
@@ -150,7 +155,7 @@ def prune_parquet(spark, path: str, mode: str = "join", partition_by: list[str] 
                 shutil.rmtree(dst)
             os.rename(src, dst)
         shutil.rmtree(tmp, ignore_errors=True)
-        return before - after
+        return sum(r["count"] for r in superseded)
 
     before = df.count()
     kept = latest_all_versions(df, mode=mode)

@@ -14,10 +14,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from execute_sync_spark.landing.schema import LANDING_COLUMNS
+from execute_sync_spark.landing.schema import LANDING_COLUMNS, LANDING_SCHEMA
 from execute_sync_spark.operators import dedup as dedup_ops
 from execute_sync_spark.operators.views import create_views as compile_views
 from execute_sync_spark.schema.model import RootSchema
@@ -45,29 +45,36 @@ class ParquetSink:
         transactionally).
 
         Delivery contract on plain parquet: the batch is staged to a temp dir
-        by one Spark job, then published into the table as per-file renames
+        by one write, then published into the table as per-file renames
         followed by the marker write. A crash inside that publish loop can
         leave a partially-visible batch that a retry re-appends — i.e.
         at-least-once within a narrow window; the D1/D2 dedup views absorb
         exact duplicate copies (same (type,id,version), newest batch wins),
         which is why the sync protocol remains correct.
+
+        Returns the rows written, counted by an ``Observation`` on the
+        written frame while the write runs: the batch's plan executes once,
+        and nothing is read back.
         """
         import shutil
         import uuid
 
-        if txn_id is not None and os.path.exists(self._txn_marker(txn_id)):
+        if txn_id is not None and self.txn_applied(txn_id):
             return 0
         # cluster files by (id, version) so downstream dedup shuffles read
         # locally-sorted input (the parquet stand-in for Delta Z-ordering)
-        clustered = landed.select(*LANDING_COLUMNS).sortWithinPartitions("id", "version")
+        rows = Observation()
+        clustered = (
+            landed.select(*LANDING_COLUMNS)
+            .observe(rows, F.count(F.lit(1)).alias("n"))
+            .sortWithinPartitions("id", "version")
+        )
         tmp = f"{self.path.rstrip('/')}_stage_{uuid.uuid4().hex[:8]}"
         writer = clustered.write.mode("overwrite").format(self.file_format)
         if self.partition_by_type:
             writer = writer.partitionBy("type")
         writer.save(tmp)
-        # row count from the staged footers (metadata-only scan) — the plan
-        # executes exactly once, in the write above
-        n = self.spark.read.format(self.file_format).load(tmp).count()
+        n = rows.get["n"]
         try:
             for root_dir, _, files in os.walk(tmp):
                 rel = os.path.relpath(root_dir, tmp)
@@ -88,6 +95,11 @@ class ParquetSink:
             shutil.rmtree(tmp, ignore_errors=True)
         return n
 
+    def txn_applied(self, txn_id: str) -> bool:
+        """True when the batch ``txn_id`` is already in the table, so an
+        ``append`` of it is absorbed as a replay."""
+        return os.path.exists(self._txn_marker(txn_id))
+
     def _txn_marker(self, txn_id: str) -> str:
         import hashlib
 
@@ -95,7 +107,12 @@ class ParquetSink:
         return os.path.join(self.path, "_txns", digest)
 
     def read(self) -> DataFrame:
-        return self.spark.read.format(self.file_format).load(self.path).select(*LANDING_COLUMNS)
+        """The landing table, read with its declared schema (no inference
+        job); ``type`` comes from the partition directories."""
+        return (
+            self.spark.read.schema(LANDING_SCHEMA).format(self.file_format).load(self.path)
+            .select(*LANDING_COLUMNS)
+        )
 
     def exists(self) -> bool:
         return os.path.isdir(self.path) and any(
@@ -197,6 +214,7 @@ class ParquetSink:
                 self.path,
                 partition_by=["type"] if self.partition_by_type else None,
                 file_format=self.file_format,
+                schema=LANDING_SCHEMA,
             )
         finally:
             if saved is not None:
