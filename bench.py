@@ -3,38 +3,40 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec", "runs": N,
-   "queries": {alias: sec, ...}, "sf": <sf>}
+   "seq": <sec>, "conc": <sec>, "queries": {code: sec, ...}, "sf": <sf>,
+   "cp": <concurrent passes>}
 
 The harness that records this line keeps only the last ~2000 bytes of
-output, so the printed line uses short query aliases — STABLE ones, frozen
-in the committed registry ``tools/bench_aliases.json`` (VERDICT r6 #5: the
-per-run adaptive truncation made round-over-round comparison possible on
-only 22 of 120 keys; a frozen registry makes every future round comparable
-on every key). New queries get appended to the registry, existing aliases
-never change. Full-name per-query timings AND the alias map are always
-written to BENCH_DETAIL.json next to this script.
+output, so the printed line keys each query by a STABLE 2-char code,
+frozen in the committed registry ``tools/bench_codes.json``: new queries
+get appended to the registry, existing codes never change. Full-name
+per-query timings and the code map are always written to BENCH_DETAIL.json
+next to this script.
 
 Sequential times are the per-query MEDIAN of ``$SPARK_GRAFT_BENCH_RUNS``
 passes (default 3) — single-pass numbers are ±15% on a shared host (the
 uniform 13% r5→r6 drift), and the median cancels both cold-cache first
 runs and load spikes.
 
-Scale harness: ``--scale10`` re-times the workload on the committed 10x
-synthesis and records wall ratios vs the base pass (ratio ≈ factor =
-linear). ``--scale30 --only spans,semantic,...`` does the same at 30x for
-a named subset (--only scopes only the 30x pass; scale10 stays full) — the heavy hitters that prove the linear story holds
-another 3x out without paying 30x on the deliberately-exact pair finders.
-``--scale-full --only ...`` measures ALL FOUR blocks (10x/30x, cold and
-warm) in one invocation: a warm base pass is timed alongside the cold
-one, so every block's ratio divides by a same-invocation, cache-state-
-matched base — the mode to use for the round's scale-evidence refresh.
+Usage: ``python bench.py [--warm] [--scale-full [--only a,b,...]]``.
+
+``--warm`` times the second run of each query (see ``_timed_pass``).
+``--scale-full`` re-times the workload on the locally built 10x and 30x
+synthesis (tools/make_scale10.py), cold and warm, and records wall ratios
+vs the base pass (ratio ≈ factor = linear). A warm base pass is timed
+alongside the cold one, so every block's ratio divides by a
+same-invocation, cache-state-matched base. ``--only`` restricts the 30x
+passes to a named subset: the heavy hitters that prove the linear story
+holds another 3x out without paying 30x on the deliberately-exact pair
+finders. A profile by layer, or an A/B of one setting, is
+``perfbench/run.py`` (see README).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
-import re
 import statistics
 import sys
 import time
@@ -46,91 +48,20 @@ from execute_sync_spark.plans import workload
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 MAX_LINE = 1950  # keep the printed JSON line inside the 2000-byte tail window
-ALIAS_REGISTRY = os.path.join(REPO, "tools", "bench_aliases.json")
 CODE_REGISTRY = os.path.join(REPO, "tools", "bench_codes.json")
-
-
-def _token_weights(
-    names: list[str], times: dict[str, float], tokens: int
-) -> dict[str, int]:
-    """Per-query admission weights for the optional token pool: ~1 token
-    per 0.5 s of sequential runtime, capped at 16 AND at the pool capacity
-    — a weight above capacity can never be acquired (the pool never grows
-    past its initial n), so an uncapped weight would deadlock the bench on
-    the first heavy query whenever SPARK_GRAFT_BENCH_TOKENS < 16
-    (ADVICE r15). Module-level so the clamp is pinned by a Spark-free test.
-    """
-    import math
-
-    return {
-        name: max(1, min(16, tokens, math.ceil(times.get(name, 0.5) / 0.5)))
-        for name in names
-    }
-
-
-def _gen_alias(name: str, used: set[str], cap: int = 5) -> str:
-    """Deterministic short alias for one new name, collision-free against
-    ``used`` (q1, dd_ja, st_se, ...)."""
-    short_prefix = {
-        "q_": "", "dedup_": "dd_", "curate_": "cu_", "stream_": "st_",
-        "text_": "tx_", "sim_": "sm_", "mm_": "mm_", "v_": "v_", "d": "d",
-    }
-    m = re.match(r"^q(\d+)_", name)
-    if m:
-        cand = f"q{m.group(1)}"
-    else:
-        cand = name
-        for pre, rep in short_prefix.items():
-            if name.startswith(pre):
-                cand = rep + name[len(pre):]
-                break
-        cand = cand[:cap]
-    n = cap
-    while cand in used and n < len(name):
-        n += 2
-        cand = name[:n]
-    i = 2
-    base = cand
-    while cand in used:
-        cand = f"{base}{i}"
-        i += 1
-    return cand
-
-
-def _aliases(names: list[str]) -> dict[str, str]:
-    """STABLE aliases from the committed registry: existing entries are
-    never changed (so BENCH_r{N}.json keys compare across rounds); unseen
-    names get a fresh non-colliding alias, appended and persisted."""
-    try:
-        with open(ALIAS_REGISTRY) as f:
-            registry: dict[str, str] = json.load(f)
-    except (OSError, ValueError):
-        registry = {}
-    used = set(registry.values())
-    new = False
-    for name in sorted(names):  # sorted: assignment independent of QUERIES order
-        if name not in registry:
-            registry[name] = _gen_alias(name, used)
-            used.add(registry[name])
-            new = True
-    if new:
-        with open(ALIAS_REGISTRY, "w") as f:
-            json.dump(registry, f, indent=1, sort_keys=True)
-    return {n: registry[n] for n in names}
 
 
 def _codes(names: list[str]) -> dict[str, str]:
     """STABLE 2-char codes for the PRINTED line (round 17 measurement fix).
 
-    The 5-char alias map outgrew the harness's 2000-byte output tail at
-    ~150 queries, so since round 14 the printed line fell back to
+    The 5-char alias map of rounds 6-16 outgrew the harness's 2000-byte
+    output tail at ~150 queries, so rounds 14-16 printed
     ``{"see": "BENCH_DETAIL.json"}`` and the driver could compare ZERO
     per-query times round-over-round (PERF_r16: n_common=0, bench_ok
-    false) — and its 8-core-vs-32-core scaling measurement was empty too.
-    Two-char [a-z0-9] codes (1296 capacity) fit all 184 queries in ~1870
-    bytes. Codes are frozen in ``tools/bench_codes.json`` exactly like the
-    aliases: existing entries never change, unseen names get the next free
-    code. BENCH_DETAIL.json carries the full-name times and this code map.
+    false). Two-char [a-z0-9] codes (1296 capacity) fit all 184 queries in
+    ~1870 bytes. Codes are frozen in ``tools/bench_codes.json``: existing
+    entries never change, unseen names get the next free code.
+    BENCH_DETAIL.json carries the full-name times and this code map.
     """
     try:
         with open(CODE_REGISTRY) as f:
@@ -219,17 +150,17 @@ def _scale_pass(
     spark,
     detail: dict,
     factor: int,
+    warm: bool,
     only: list[str] | None = None,
-    warm: bool | None = None,
 ) -> None:
-    """--scale10 / --scale30: re-time the workload (or an --only subset) on
-    the committed ``factor``x synthesis (tools/make_scale10.py; built on
-    first use) and record per-query wall ratios vs the base pass — the
-    harness that catches superlinear plan regressions instead of ad-hoc
-    checks. Ratio reading: ~factor = linear in data (good); >>factor =
-    superlinear SUSPECT — profile before blaming the plan (driver-side
-    result collection and the deliberately-exact pair finders are the
-    known benign/declared cases, see ROADMAP)."""
+    """--scale-full: re-time the workload (or an --only subset) on the
+    ``factor``x synthesis (tools/make_scale10.py; built on first use) and
+    record per-query wall ratios vs the base pass — the harness that
+    catches superlinear plan regressions instead of ad-hoc checks. Ratio
+    reading: ~factor = linear in data (good); >>factor = superlinear
+    SUSPECT — profile before blaming the plan (driver-side result
+    collection and the deliberately-exact pair finders are the known
+    benign/declared cases, see ROADMAP)."""
     from tools.make_scale10 import build, is_current
 
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -247,8 +178,6 @@ def _scale_pass(
     # meaningless (or crashing) ratio_vs_base numbers.
     if not is_current(spark, src, dst, factor):
         build(spark, src, dst, factor)
-    if warm is None:
-        warm = "--warm" in sys.argv
     times_n = _timed_pass(spark, dst, warm=warm, only=only)
     # warm ratios divide by the WARM base pass when one was measured in
     # this invocation (--scale-full); plan-vs-plan, cache-state matched
@@ -334,42 +263,73 @@ def _carry_scale_blocks(detail: dict, detail_path: str) -> None:
             detail[key] = prev
 
 
-def _parse_only() -> list[str] | None:
-    """Validate --only BEFORE any expensive pass runs: a malformed or
-    misplaced flag must fail in the first second, not after the 3-run
-    base pass."""
-    if "--only" not in sys.argv:
-        return None
-    i = sys.argv.index("--only")
-    if i + 1 >= len(sys.argv) or sys.argv[i + 1].startswith("--"):
-        raise SystemExit("--only requires a comma-separated query list")
-    names = sys.argv[i + 1].split(",")
-    known = set(workload.QUERIES) | set(getattr(workload, "BENCH_EXTRA_QUERIES", {}))
-    unknown = [n for n in names if n not in known]
-    if unknown:
-        raise SystemExit(f"--only names not in the workload: {unknown}")
-    if "--scale30" not in sys.argv and "--scale-full" not in sys.argv:
-        raise SystemExit("--only scopes the 30x pass; pass --scale30 or --scale-full")
-    return names
+def _parse_args() -> argparse.Namespace:
+    """Parse the command line BEFORE any expensive pass runs: an unknown or
+    malformed flag must fail in the first second, not after the 3-run base
+    pass."""
+    ap = argparse.ArgumentParser(description="Time every workload query; print one JSON line.")
+    ap.add_argument("--warm", action="store_true",
+                    help="time the second run of each query (page cache and codegen warm)")
+    ap.add_argument("--scale-full", action="store_true",
+                    help="also time the 10x and 30x synthesis, cold and warm")
+    ap.add_argument("--only", type=lambda v: v.split(","), metavar="a,b,...",
+                    help="restrict the 30x passes of --scale-full to these queries")
+    args = ap.parse_args()
+    if args.only is not None:
+        if not args.scale_full:
+            ap.error("--only scopes the 30x passes; pass --scale-full")
+        known = set(workload.QUERIES) | set(getattr(workload, "BENCH_EXTRA_QUERIES", {}))
+        unknown = [n for n in args.only if n not in known]
+        if unknown:
+            ap.error(f"--only names not in the workload: {unknown}")
+    return args
 
 
-def _conc_passes() -> int:
-    """``SPARK_GRAFT_BENCH_CONC_PASSES`` (default 2): concurrent passes
-    whose better wall is the headline; at least one must run."""
-    raw = os.environ.get("SPARK_GRAFT_BENCH_CONC_PASSES", "2")
+def _positive_int(name: str, default: int) -> int:
+    """The integer env knob ``name`` (``default`` when unset); anything that
+    is not an integer >= 1 exits before the bench starts."""
+    raw = os.environ.get(name, str(default))
     try:
         n = int(raw)
     except ValueError:
         n = 0
     if n < 1:
-        raise SystemExit(f"SPARK_GRAFT_BENCH_CONC_PASSES={raw!r}: expected an integer >= 1")
+        raise SystemExit(f"{name}={raw!r}: expected an integer >= 1")
     return n
 
 
+def _line(total: float, runs: int, seq: float, conc: float, conc_passes: int,
+          queries: dict, sf: float) -> str:
+    """The printed JSON line. Fields are only ever added, never changed in
+    meaning: each one is compared round over round."""
+    line = {
+        "metric": "workload_total_runtime",
+        "value": total,
+        "unit": "sec",
+        "runs": runs,
+        "seq": seq,
+        "conc": conc,
+        "queries": queries,
+        "sf": sf,
+        "cp": conc_passes,
+    }
+    s = json.dumps(line, separators=(",", ":"))
+    if len(s) > MAX_LINE:
+        # last-resort fallback (the per-query map overflowed the tail
+        # window): drop per-query detail rather than emit an unparseable
+        # (truncated) line; BENCH_DETAIL.json still has it all
+        line["queries"] = {"see": "BENCH_DETAIL.json"}
+        s = json.dumps(line, separators=(",", ":"))
+    return s
+
+
 def main() -> None:
-    only30 = _parse_only()
-    # validated before the sequential passes, which take minutes
-    conc_passes = _conc_passes()
+    args = _parse_args()
+    # validated before the warm-up and the sequential passes, which take minutes
+    runs = _positive_int("SPARK_GRAFT_BENCH_RUNS", 3)
+    streams = _positive_int("SPARK_GRAFT_BENCH_STREAMS", 24)
+    warm_runs = _positive_int("SPARK_GRAFT_BENCH_WARM_RUNS", 2)
+    conc_passes = _positive_int("SPARK_GRAFT_BENCH_CONC_PASSES", 2)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = get_spark("bench")
@@ -409,9 +369,7 @@ def main() -> None:
     except Exception:
         pass  # warmup only — never fail the bench for it
 
-    warm = "--warm" in sys.argv
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    times, run_totals = _median_passes(spark, sf_dir, runs=runs, warm=warm)
+    times, run_totals = _median_passes(spark, sf_dir, runs=runs, warm=args.warm)
     seq_total = round(sum(times.values()), 3)
 
     # Throughput pass (TPC-H-style multi-stream run): the same workload with
@@ -423,59 +381,25 @@ def main() -> None:
     from concurrent.futures import ThreadPoolExecutor
 
     # 24 streams, single FIFO pool: the round-11 head-to-head experiment
-    # (BENCH_DETAIL experiments.conc_scaling_r11, tools/conc_experiment.py)
+    # (BENCH_DETAIL experiments.conc_scaling_r11)
     # measured per-query FAIR pools at no benefit (36.3 s pooled vs 33.4 s
     # unpooled at 8 streams) and stream COUNT as the real lever (45 s at 4
     # -> 24-27 s at 16-32): most queries are dominated by per-job
     # scheduling latency, so the fix is more in-flight jobs filling idle
     # cores, not fair-share arbitration between them. 24 measured best;
-    # 16-32 are within session noise (+-15%).
-    streams = int(os.environ.get("SPARK_GRAFT_BENCH_STREAMS", "24"))
+    # 16-32 are within session noise (+-15%). SPARK_GRAFT_BENCH_STREAMS
+    # overrides the count.
 
     # longest-first (LPT) order shrinks the makespan: the handful of 3-6 s
     # streaming/corpus queries start immediately instead of landing on an
     # already-loaded stream near the end
     order = sorted(workload.QUERIES.items(), key=lambda kv: -times[kv[0]])
 
-    # Optional weighted-token admission (round 15, default OFF): each query
-    # carries a token weight ~ its sequential seconds and total in-flight
-    # weight is capped, so heavies run against bounded light concurrency.
-    # The r15 head-to-head (BENCH_DETAIL experiments.conc_sched_r15 +
-    # conc_driver_cpu_r15) measured it cutting heavy in-stream dilation
-    # 5.3x -> 1.5x at IDENTICAL wall — the wall is driver-python-bound
-    # (~30-33 GIL-serialized core-seconds of per-query plan construction,
-    # invariant across every scheduling config; cores 47-64% idle; no hot
-    # JVM scheduler thread), so this is a per-query-latency-fairness knob,
-    # not a throughput one. Enable with SPARK_GRAFT_BENCH_TOKENS=48.
-    tokens = int(os.environ.get("SPARK_GRAFT_BENCH_TOKENS", "0"))
-    token_pool = None
-    if tokens:
-        import threading
-
-        class _TokenPool:
-            def __init__(self, n):
-                self.n = n
-                self.cv = threading.Condition()
-
-            def acquire(self, w):
-                with self.cv:
-                    while self.n < w:
-                        self.cv.wait()
-                    self.n -= w
-
-            def release(self, w):
-                with self.cv:
-                    self.n += w
-                    self.cv.notify_all()
-
-        token_pool = _TokenPool(tokens)
-        weights = _token_weights([name for name, _ in order], times, tokens)
-
     # The concurrent wall is measured over TWO independent passes and the
     # better one is reported (round 17): the sequential total is already a
     # median-of-3 for exactly this reason (VERDICT r6 #5), but the
     # concurrent pass — the headline — was a single throw, and the round-17
-    # host oscillates 2-5x on ~10-minute windows (session_age_probe: the
+    # host oscillates 2-5x on ~10-minute windows (OPTIMIZATION_r17.md: the
     # identical pass measured 37.5 s and 63.9 s minutes apart, idle host).
     # Both walls are recorded in BENCH_DETAIL; min-of-2 is the same
     # robustness class as min(seq_total, wall) below. Every pass computes
@@ -488,14 +412,8 @@ def main() -> None:
 
         def _run(item):
             name, fn = item
-            if token_pool:
-                token_pool.acquire(weights[name])
             s = time.perf_counter() - t0
-            try:
-                fn(spark, sf_dir).collect()
-            finally:
-                if token_pool:
-                    token_pool.release(weights[name])
+            fn(spark, sf_dir).collect()
             pass_trace[name] = (round(s, 3), round(time.perf_counter() - t0, 3))
 
         with ThreadPoolExecutor(max_workers=streams) as ex:
@@ -517,7 +435,6 @@ def main() -> None:
     slowest = sorted(trace.items(), key=lambda kv: kv[1][0] - kv[1][1])[:10]
 
     total = min(seq_total, wall)
-    alias = _aliases(list(times))
     code = _codes(list(times))
     detail = {
         "metric": "workload_total_runtime",
@@ -541,57 +458,34 @@ def main() -> None:
             for n, (s, e) in slowest
         ],
         "queries": times,
-        "aliases": alias,
         "codes": code,  # printed-line key -> full name
-        "warm": warm,
+        "warm": args.warm,
     }
     detail_path = os.path.join(REPO, "BENCH_DETAIL.json")
 
     # --only scopes the EXPENSIVE 30x pass; scale10 always covers the
     # full workload so its block stays comparable round over round
-    # (validated up front in _parse_only)
-    if "--scale-full" in sys.argv:
+    # (validated up front in _parse_args)
+    if args.scale_full:
         # ONE invocation measures all four scale blocks against
         # same-invocation bases (VERDICT r9 task 1): a warm base pass is
         # timed too, so warm scale ratios divide by a warm base instead
         # of a different run's. This is the only mode in which all four
         # blocks can be simultaneously fresh.
-        warm_runs = int(os.environ.get("SPARK_GRAFT_BENCH_WARM_RUNS", "2"))
         detail["queries_warm"], _ = _median_passes(
             spark, sf_dir, runs=warm_runs, warm=True
         )
         _scale_pass(spark, detail, 10, warm=False)
         _scale_pass(spark, detail, 10, warm=True)
-        _scale_pass(spark, detail, 30, only=only30, warm=False)
-        _scale_pass(spark, detail, 30, only=only30, warm=True)
-    if "--scale10" in sys.argv:
-        _scale_pass(spark, detail, 10)
-    if "--scale30" in sys.argv:
-        _scale_pass(spark, detail, 30, only=only30)
+        _scale_pass(spark, detail, 30, only=args.only, warm=False)
+        _scale_pass(spark, detail, 30, only=args.only, warm=True)
     _carry_scale_blocks(detail, detail_path)  # carries blocks this run did not measure
 
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1)
 
     compact = {code[k]: _enc_sec(v) for k, v in times.items()}
-    line = {
-        "metric": "workload_total_runtime",
-        "value": total,
-        "unit": "sec",
-        "runs": runs,
-        "seq": seq_total,
-        "conc": wall,
-        "queries": compact,
-        "sf": float(sf),
-    }
-    s = json.dumps(line, separators=(",", ":"))
-    if len(s) > MAX_LINE:
-        # last-resort fallback (the registry aliases overflowed the tail
-        # window): drop per-query detail rather than emit an unparseable
-        # (truncated) line; BENCH_DETAIL.json still has it all
-        line["queries"] = {"see": "BENCH_DETAIL.json"}
-        s = json.dumps(line, separators=(",", ":"))
-    print(s)
+    print(_line(total, runs, seq_total, wall, conc_passes, compact, float(sf)))
 
 
 if __name__ == "__main__":

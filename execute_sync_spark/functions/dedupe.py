@@ -462,7 +462,8 @@ def ngram_jaccard_pairs(
     # oracle independently verifies every gated consumer). Every exchange,
     # hash table and checkpoint downstream carries 8-byte longs.
     # SPARK_GRAFT_SHINGLE_KEY=string keeps the literal-string join for
-    # A/B measurement (tools/ab_r17.py) and as the collision-free escape.
+    # A/B measurement (BENCH_DETAIL experiments.ab_shingle_hash_key_r17) and
+    # as the collision-free escape.
     key = F.xxhash64("shingle") if _HASH_JOIN_KEY else F.col("shingle")
     if shingles is not None:
         sh = shingles.select(F.col(id_col), key.alias("__sh64"))

@@ -10,16 +10,16 @@ the subtree is vs how wide its output is) and not on the profiler's task
 core-seconds, which systematically flatter checkpoints.
 
 Every round-16 *shared-subtree* checkpoint is therefore a labeled
-``mat(df, site)`` point that can be disabled per site, and the shipped
-default for each site is the configuration that measured faster
-(tools/ab_r17.py, paired interleaved runs). Lineage-cutting checkpoints —
-iterative solvers, materialize-before-overwrite in the cluster-state
-protocol — are NOT mat points: they are load-bearing and stay
-unconditional.
+``mat(df, site)`` point that can be disabled per site. Every site ships
+enabled: in the paired interleaved A/B over the shingle family (BENCH_DETAIL
+experiments.ab_mat_sites_shingle_r17) no site measured faster lazy.
+Lineage-cutting checkpoints — iterative solvers, materialize-before-
+overwrite in the cluster-state protocol — are NOT mat points: they are
+load-bearing and stay unconditional.
 
 ``SPARK_GRAFT_MAT_OFF`` (comma-separated site labels, or ``all``)
-disables sites at import time — the measurement/production knob. The
-defaults below encode the round-17 measured outcome.
+disables sites at import time — the measurement/production knob. An A/B
+of a site is two ``perfbench/run.py`` runs, one with the site disabled.
 """
 
 from __future__ import annotations
@@ -28,11 +28,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-# Sites disabled by DEFAULT: the round-17 A/B measured the lazy form
-# faster on these (see OPTIMIZATION_r17.md for the per-site numbers).
-DEFAULT_OFF: set[str] = set()
-
-DISABLED: set[str] = set(DEFAULT_OFF)
+DISABLED: set[str] = set()
 
 _ALL_SITES = {
     "jaccard_shingles",      # ngram_jaccard_pairs: internal word_shingles

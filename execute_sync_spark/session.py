@@ -44,8 +44,9 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """``extra_conf``: configs that must be set BEFORE the SparkContext
-    exists (e.g. ``spark.scheduler.allocation.file`` for weighted FAIR
-    pools — tools/conc_sched_experiment.py). No effect on an already-
+    exists (e.g. the event-log settings ``perfbench/run.py`` passes, or
+    ``spark.scheduler.allocation.file`` for weighted FAIR pools — BENCH_DETAIL
+    experiments.conc_sched_r15). No effect on an already-
     running session (getOrCreate reuses it), like every builder config."""
     cpus = cpus or _DEFAULT_CPUS
     builder = (

@@ -30,11 +30,9 @@ class ParquetSink:
     (default) or "orc" — both columnar, splittable, predicate-pushdown
     formats Spark writes natively."""
 
-    def __init__(self, spark: SparkSession, path: str, partition_by_type: bool = True,
-                 file_format: str = "parquet"):
+    def __init__(self, spark: SparkSession, path: str, file_format: str = "parquet"):
         self.spark = spark
         self.path = path
-        self.partition_by_type = partition_by_type
         self.file_format = file_format
 
     def append(self, landed: DataFrame, txn_id: str | None = None) -> int:
@@ -70,10 +68,7 @@ class ParquetSink:
             .sortWithinPartitions("id", "version")
         )
         tmp = f"{self.path.rstrip('/')}_stage_{uuid.uuid4().hex[:8]}"
-        writer = clustered.write.mode("overwrite").format(self.file_format)
-        if self.partition_by_type:
-            writer = writer.partitionBy("type")
-        writer.save(tmp)
+        clustered.write.mode("overwrite").format(self.file_format).partitionBy("type").save(tmp)
         n = rows.get["n"]
         try:
             for root_dir, _, files in os.walk(tmp):
@@ -160,8 +155,6 @@ class ParquetSink:
         read or rewritten — at 100 TB a sync touching one doc type refreshes
         one partition subtree. Falls back to a full materialize when no
         snapshot exists. Returns the refreshed type list."""
-        import shutil
-
         snap = f"{self.path.rstrip('/')}_latest"
         if not os.path.isdir(snap):
             self.materialize_latest()
@@ -181,14 +174,7 @@ class ParquetSink:
         fresh = dedup_ops.latest(raw.filter(F.col("type").isin(touched)))
         tmp = f"{snap}_delta_{os.getpid()}"
         fresh.write.mode("overwrite").format(self.file_format).partitionBy("type").save(tmp)
-        for t in touched:
-            src = os.path.join(tmp, f"type={t}")
-            dst = os.path.join(snap, f"type={t}")
-            if os.path.isdir(dst):
-                shutil.rmtree(dst)
-            if os.path.isdir(src):
-                os.rename(src, dst)
-        shutil.rmtree(tmp, ignore_errors=True)
+        dedup_ops.swap_type_partitions(tmp, snap)
         return touched
 
     def read_latest(self) -> DataFrame:
@@ -212,7 +198,6 @@ class ParquetSink:
             return dedup_ops.prune_parquet(
                 self.spark,
                 self.path,
-                partition_by=["type"] if self.partition_by_type else None,
                 file_format=self.file_format,
                 schema=LANDING_SCHEMA,
             )
@@ -239,12 +224,7 @@ class ParquetSink:
         import uuid
 
         results: dict[str, int] = {}
-        part_dirs = (
-            sorted(glob.glob(os.path.join(self.path, "type=*")))
-            if self.partition_by_type
-            else [self.path]
-        )
-        for part_dir in part_dirs:
+        for part_dir in sorted(glob.glob(os.path.join(self.path, "type=*"))):
             files = [
                 f
                 for f in os.listdir(part_dir)

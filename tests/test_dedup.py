@@ -28,36 +28,33 @@ USING (type, id, version)
 """
 
 
-@pytest.mark.parametrize("mode", ["join", "window"])
-def test_d1_latest_all_versions(landed, mode):
+def test_d1_latest_all_versions(landed):
     df, con = landed
-    d1 = latest_all_versions(df, mode=mode)
+    d1 = latest_all_versions(df)
     # afe-0001 v2 landed in batches 2 and 3 → only the batch-3 copy survives
     rows = d1.filter((F.col("id") == "afe-0001") & (F.col("version") == 2)).collect()
     assert len(rows) == 1
     assert rows[0].batch_date == feed.BATCH_DATES[2].replace(tzinfo=None)
     # every version is still present
     assert d1.filter(F.col("id") == "afe-0002").count() == 3
-    assert_df_equal(d1, con.sql(D1_ORACLE), f"D1[{mode}]")
+    assert_df_equal(d1, con.sql(D1_ORACLE), "D1")
 
 
-@pytest.mark.parametrize("mode", ["join", "window"])
-def test_d2_latest(landed, mode):
+def test_d2_latest(landed):
     df, con = landed
-    d2 = latest(df, mode=mode)
+    d2 = latest(df)
     # current state per document; soft-deleted afe-0002 v3 visible
     afe2 = d2.filter(F.col("id") == "afe-0002").collect()
     assert len(afe2) == 1 and afe2[0].version == 3 and afe2[0].deleted is True
     # all chunk rows of tkt-0001 v1 kept
     assert d2.filter(F.col("id") == "tkt-0001").count() == 4
-    assert_df_equal(d2, con.sql(D2_ORACLE), f"D2[{mode}]")
+    assert_df_equal(d2, con.sql(D2_ORACLE), "D2")
 
 
-@pytest.mark.parametrize("mode", ["join", "window"])
-def test_shrinking_chunks_no_stale_leak(spark, mode):
+def test_shrinking_chunks_no_stale_leak(spark):
     """Regression: when the current version (or newest land of a version) has
     FEWER chunks than an older one, no stale chunk of the superseded copy may
-    leak through. window mode used to partition per-chunk and leak them."""
+    leak through."""
     from datetime import datetime
 
     from execute_sync_spark.landing.schema import LANDING_SCHEMA
@@ -76,12 +73,12 @@ def test_shrinking_chunks_no_stale_leak(spark, mode):
     ]
     df = spark.createDataFrame(rows, LANDING_SCHEMA)
 
-    d1 = latest_all_versions(df, mode=mode)
+    d1 = latest_all_versions(df)
     # doc-2 v1: only the batch-2 copy (1 chunk) survives D1
     got = [(r.chunk, r.batch_date) for r in d1.filter(F.col("id") == "doc-2").collect()]
     assert got == [(0, b2)], got
 
-    d2 = latest(df, mode=mode)
+    d2 = latest(df)
     # doc-1: only v2's single chunk; v1's chunks 1,2 must not leak
     got = sorted((r.version, r.chunk) for r in d2.filter(F.col("id") == "doc-1").collect())
     assert got == [(2, 0)], got
@@ -104,7 +101,7 @@ def test_d3_prune_parquet(spark, landed, tmp_path):
 
     df, _ = landed
     path = str(tmp_path / "landing_pq")
-    df.write.parquet(path)
+    df.write.partitionBy("type").parquet(path)
     removed = prune_parquet(spark, path)
     assert removed == 1
     assert spark.read.parquet(path).count() == df.count() - 1

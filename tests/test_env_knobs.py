@@ -44,15 +44,27 @@ def test_mat_off_rejects_unknown_site(monkeypatch):
     assert matpoint.DISABLED == before
 
 
+BENCH_INT_KNOBS = [
+    "SPARK_GRAFT_BENCH_RUNS",
+    "SPARK_GRAFT_BENCH_STREAMS",
+    "SPARK_GRAFT_BENCH_WARM_RUNS",
+    "SPARK_GRAFT_BENCH_CONC_PASSES",
+]
+
+
 @pytest.mark.parametrize("value", ["0", "-2", "two"])
 def test_bench_conc_passes_rejects_fewer_than_one(monkeypatch, value):
+    """Every integer bench knob, not only the concurrent pass count."""
     import bench
 
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_CONC_PASSES", value)
-    with pytest.raises(SystemExit, match="SPARK_GRAFT_BENCH_CONC_PASSES"):
-        bench._conc_passes()
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_CONC_PASSES", "3")
-    assert bench._conc_passes() == 3
+    for name in BENCH_INT_KNOBS:
+        monkeypatch.setenv(name, value)
+        with pytest.raises(SystemExit, match=name):
+            bench._positive_int(name, 2)
+        monkeypatch.setenv(name, "3")
+        assert bench._positive_int(name, 2) == 3
+        monkeypatch.delenv(name)
+        assert bench._positive_int(name, 2) == 2
 
 
 def test_bench_enc_sec_never_prints_zero():

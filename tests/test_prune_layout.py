@@ -154,38 +154,6 @@ def test_compact_files_binpacks_partitions(spark, tmp_path):
     assert sink.compact_files(target_mb=128) == {}
 
 
-def test_window_prune_collapses_ties_in_clean_partitions(spark, tmp_path):
-    """mode="window" must take the FULL rewrite: the dirty-partition test is
-    join-semantics (superseded_rows), so a partition holding same-batch tie
-    duplicates but no superseded rows would be skipped by the scoped path —
-    exactly the rows window mode exists to collapse."""
-    from datetime import datetime
-
-    from execute_sync_spark.operators.dedup import prune_parquet
-
-    d0, d1 = datetime(2026, 3, 1), datetime(2026, 3, 2)
-    rows = [
-        # type=AFE: exact same-batch tie duplicate, NO superseded rows
-        ("AFE", "a", 1, 0, d1, "p1"),
-        ("AFE", "a", 1, 0, d1, "p1-dup"),
-        # type=VENDOR: genuinely superseded older batch copy
-        ("VENDOR", "v", 1, 0, d0, "old"),
-        ("VENDOR", "v", 1, 0, d1, "new"),
-    ]
-    df = spark.createDataFrame(
-        rows, "type string, id string, version int, chunk int, batch_date timestamp, payload string"
-    )
-    path = str(tmp_path / "wh")
-    df.write.partitionBy("type").parquet(path)
-
-    removed = prune_parquet(spark, path, mode="window", partition_by=["type"])
-    assert removed == 2
-    out = spark.read.parquet(path)
-    assert out.count() == 2
-    afe = out.filter("type = 'AFE'").collect()
-    assert len(afe) == 1  # the tie collapsed even though AFE had no superseded row
-
-
 def test_scoped_prune_survives_escaped_partition_values(spark, tmp_path):
     """A type value Spark must escape in the partition dir name (':' ->
     %3A) goes through the scoped rewrite without stranding the partition:
@@ -207,9 +175,34 @@ def test_scoped_prune_survives_escaped_partition_values(spark, tmp_path):
     path = str(tmp_path / "wh")
     df.write.partitionBy("type").parquet(path)
 
-    removed = prune_parquet(spark, path, mode="join", partition_by=["type"])
+    removed = prune_parquet(spark, path)
     assert removed == 1
     out = spark.read.parquet(path)
     assert out.count() == 2
     kept = {(r.type, r.payload) for r in out.collect()}
     assert kept == {("A:B", "new"), ("PLAIN", "keep")}
+
+
+def test_incremental_refresh_survives_escaped_partition_values(spark, tmp_path):
+    """refresh_latest swaps the snapshot partition of a type Spark escapes in
+    the directory name (':' -> %3A): a newer version of an ``A:B`` document
+    must reach the snapshot, not only the refreshed-types list."""
+    import json
+    from datetime import datetime
+
+    from execute_sync_spark.operators import latest
+
+    def doc(version):
+        return json.dumps({
+            "$TYPE": "A:B", "DOCUMENT_ID": "x", "$VERSION": version, "$AUTHOR_ID": "u-1",
+            "$DATE": "2026-03-01T00:00:00Z", "$DELETED": False,
+        })
+
+    sink = ParquetSink(spark, str(tmp_path / "wh"))
+    sink.append(land_ndjson_lines(spark, [doc(1)], datetime(2026, 3, 1)))
+    assert sink.refresh_latest() == ["*"]
+    sink.append(land_ndjson_lines(spark, [doc(2)], datetime(2026, 3, 2)))
+    assert sink.refresh_latest() == ["A:B"]
+    snap = {(r.type, r.version) for r in sink.read_latest().collect()}
+    assert snap == {(r.type, r.version) for r in latest(sink.read()).collect()}
+    assert snap == {("A:B", 2)}

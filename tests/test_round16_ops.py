@@ -2,25 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-
-
-def test_bench_token_weights_clamped_to_pool_capacity():
-    """ADVICE r15: query weights reach 16, and the token pool never grows
-    past its initial capacity, so an unclamped weight deadlocks the bench
-    permanently whenever SPARK_GRAFT_BENCH_TOKENS < 16. Every weight must
-    be acquirable from the configured pool."""
-    import bench
-
-    names = ["light", "heavy", "unknown"]
-    times = {"light": 0.1, "heavy": 30.0}
-    w = bench._token_weights(names, times, 48)
-    assert w == {"light": 1, "heavy": 16, "unknown": 1}
-    for cap in (1, 4, 15):
-        wc = bench._token_weights(names, times, cap)
-        assert wc["heavy"] == cap  # clamped: acquirable from the pool
-        assert all(1 <= v <= cap for v in wc.values())
-
 
 # ---------------------------------------------------------------------------
 # streaming-maintained NB quality classifier (the mixture-stats precedent)

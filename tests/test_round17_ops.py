@@ -27,18 +27,11 @@ def test_bench_line_carries_per_query_times_within_tail_window():
     assert len(set(code.values())) == len(code)
     assert bench._codes(list(times)) == code
     compact = {code[k]: bench._enc_sec(v) for k, v in times.items()}
-    line = {
-        "metric": "workload_total_runtime",
-        "value": 9999.999,
-        "unit": "sec",
-        "runs": 3,
-        "seq": 9999.999,
-        "conc": 9999.999,
-        "queries": compact,
-        "sf": 0.1,
-    }
-    s = json.dumps(line, separators=(",", ":"))
+    s = bench._line(9999.999, 3, 9999.999, 9999.999, 99, compact, 0.1)
     assert len(s) <= bench.MAX_LINE, (len(s), bench.MAX_LINE)
+    line = json.loads(s)
+    assert line["queries"] == compact  # not the {"see": ...} fallback
+    assert line["cp"] == 99
     # every query appears — the driver compares keys round-over-round
     assert len(compact) == len(times)
 

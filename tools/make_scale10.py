@@ -2,7 +2,7 @@
 
 Round 2 validated 10x scaling with an ad-hoc in-session synthesis; this
 commits that synthesis as a repeatable tool so superlinear regressions are
-caught by the harness (``python bench.py --scale10``), not by hand.
+caught by the harness (``python bench.py --scale-full``), not by hand.
 
 Fact tables (lineitem, orders, events, documents, embeddings) are unioned
 ``factor`` times with replica-shifted keys; join keys that cross tables
