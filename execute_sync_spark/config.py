@@ -116,6 +116,8 @@ def resolve_config(cli_overrides: Optional[dict] = None,
     for key, value in (cli_overrides or {}).items():
         if value is not None and hasattr(cfg, key):
             setattr(cfg, key, value)
+    if cfg.compat_chunking and cfg.chunk_size < 1:
+        raise ValueError(f"{_ENV_PREFIX}CHUNK_SIZE must be at least 1 with compat chunking, got {cfg.chunk_size}")
     # SQLite-style default DSN under state dir (config.go:132-136 analog)
     if not cfg.database_dsn and cfg.database_type == "parquet":
         cfg.database_dsn = os.path.join(cfg.state_dir, "execute_documents")

@@ -3,48 +3,96 @@
 Spark-first ingest (SURVEY §3.1): the raw NDJSON is read distributed
 (``spark.read.text``) or, for an in-memory page, shipped as one Arrow batch;
 metadata fields are extracted JVM-side with a single
-``from_json`` over a metadata-only StructType (parse errors -> null struct ->
+``from_json`` over a metadata-only struct schema (parse errors -> null struct ->
 row skipped, matching the reference's parse-skip path,
 /root/reference/src/cmd_sync.go:154-157), and the whole line is kept as the
-``data`` payload. No driver-side loops over records.
+``data`` payload.
 
-Compat chunk-splitting (§1.4, default OFF — Spark has no cell-size ceiling) is
-implemented with an Arrow-batched ``mapInPandas`` because it must reshape rows
-(1 doc -> 1 + n rows) based on dynamic top-level keys; this runs once at ingest
-on the raw batch, never in the query path. Deviation from the reference: the
-reference iterates Go map keys in random order when several lists in one
-document overflow (snowflake.go:169-190); we sort keys so chunk numbering is
-deterministic.
+Compat chunk-splitting (§1.4, default OFF — Spark has no cell-size ceiling)
+and key uppercasing are one pure per-line function, ``split_document``. Like
+the reference, which splits in the client process that holds the page
+before the upload (snowflake.go:167-194), a sync page is split where it
+already is, on the driver, and ships as ``(value, parts)``; distributed
+inputs (files, streams) compute ``parts`` in one Arrow-batched
+``mapInPandas``. The reshape (1 doc -> 1 + n rows) is a JVM ``posexplode``.
+Deviation from the reference: the reference iterates Go map keys in random
+order when several lists in one document overflow (snowflake.go:169-190); we
+sort keys so chunk numbering is deterministic.
 """
 
 from __future__ import annotations
 
 import json
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 from typing import Iterable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from execute_sync_spark.landing.schema import LANDING_COLUMNS, LANDING_SCHEMA
 
 # Metadata-only parse schema: from_json ignores payload fields not listed here,
 # so parsing cost is bounded regardless of document width. $VERSION arrives as
 # a JSON number (float64 in the reference, cmd_sync metadata cast) — parse as
 # double then cast to long.
-_META_STRUCT = T.StructType(
-    [
-        T.StructField("$TYPE", T.StringType(), True),
-        T.StructField("DOCUMENT_ID", T.StringType(), True),
-        T.StructField("$VERSION", T.DoubleType(), True),
-        T.StructField("$AUTHOR_ID", T.StringType(), True),
-        T.StructField("$DATE", T.StringType(), True),
-        T.StructField("$DELETED", T.BooleanType(), True),
-    ]
+_META_DDL = (
+    "`$TYPE` STRING, DOCUMENT_ID STRING, `$VERSION` DOUBLE, `$AUTHOR_ID` STRING, `$DATE` STRING, `$DELETED` BOOLEAN"
 )
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+_SPLIT_SCHEMA = "value string, parts array<string>"
+
+
+def _check_chunk_size(chunk_size: int | None) -> None:
+    """Chunking is off with ``None``; a size below 1 is rejected, since it
+    would otherwise silently turn chunking off (0) or do nothing."""
+    if chunk_size is not None and chunk_size < 1:
+        raise ValueError(f"chunk size must be at least 1 or None (off), got {chunk_size}")
+
+
+def _upper_keys(obj):
+    if isinstance(obj, dict):
+        return {k.upper() if isinstance(k, str) else k: _upper_keys(v) for k, v in obj.items()}
+    if isinstance(obj, list):
+        return [_upper_keys(v) for v in obj]
+    return obj
+
+
+def split_document(line: str, chunk_size: int | None, uppercase_keys: bool = False) -> list[str] | None:
+    """The landing rows of one NDJSON line: ``[document, chunk 1, ...]``, or
+    None when the line lands unchanged as its only row.
+
+    Compat chunk-split (snowflake.go:167-194): each top-level key whose value
+    is a JSON array longer than ``chunk_size`` is sliced out of the document
+    into extra rows ``{DOCUMENT_ID, key: slice}``, keys in sorted order. With
+    ``uppercase_keys`` every object key is uppercased first, recursively:
+    Snowflake's ``data:FIELD`` lookup is case-insensitive, Spark's
+    ``from_json`` is not, and Execute schema field names are uppercase.
+
+    Runs before the metadata filter, so a line that is not a JSON object,
+    or not JSON at all, returns None for the parse-skip path to drop."""
+    # a list of more than chunk_size items holds at least chunk_size commas,
+    # so a line with fewer cannot split and needs no parse
+    if not uppercase_keys and (chunk_size is None or line.count(",") < chunk_size):
+        return None
+    try:
+        doc = json.loads(line)
+    except (ValueError, RecursionError):
+        return None
+    if not isinstance(doc, dict):
+        return None
+    if uppercase_keys:
+        doc = _upper_keys(doc)
+    chunks = []
+    if chunk_size is not None:
+        for key in sorted(k for k in doc if isinstance(doc[k], list)):
+            value = doc[key]
+            if len(value) > chunk_size:
+                for i in range(0, len(value), chunk_size):
+                    chunks.append({"DOCUMENT_ID": doc.get("DOCUMENT_ID"), key: value[i : i + chunk_size]})
+                del doc[key]
+    if not chunks and not uppercase_keys:
+        return None
+    return [json.dumps(d, separators=(",", ":")) for d in [doc, *chunks]]
 
 
 def land_ndjson_lines(
@@ -58,9 +106,18 @@ def land_ndjson_lines(
 
     The page goes to the JVM as one Arrow batch and plans as a
     ``LocalTableScan``; a list of tuples would plan as a pickled Python RDD
-    (``Scan ExistingRDD``) that every job over the page re-reads."""
-    page = pd.DataFrame({"value": [l for l in lines if l.strip()]}, dtype=object)
-    df = spark.createDataFrame(page, "value string")
+    (``Scan ExistingRDD``) that every job over the page re-reads. Lines are
+    split here, where the page already is, so landing runs no Python
+    worker. The page (bounded by MAX_DOCUMENTS) is one partition, so the
+    in-batch dedup plans with no shuffle and an append is one Spark job."""
+    _check_chunk_size(chunk_size)
+    values = [l for l in lines if l.strip()]
+    if chunk_size is None and not uppercase_keys:
+        page, schema = pd.DataFrame({"value": values}, dtype=object), "value string"
+    else:
+        parts = [split_document(v, chunk_size, uppercase_keys) for v in values]
+        page, schema = pd.DataFrame({"value": values, "parts": parts}, dtype=object), _SPLIT_SCHEMA
+    df = spark.createDataFrame(page, schema).coalesce(1)
     return _land(df, batch_date, chunk_size, uppercase_keys)
 
 
@@ -79,109 +136,61 @@ def land_ndjson_files(
     return _land(df, batch_date, chunk_size, uppercase_keys)
 
 
-def _land(raw: DataFrame, batch_date: datetime, chunk_size: int | None, uppercase_keys: bool = False) -> DataFrame:
-    if batch_date.tzinfo is None:
-        batch_date = batch_date.replace(tzinfo=timezone.utc)
-
-    if uppercase_keys:
-        # compat option for feeds whose key casing drifts from the schema:
-        # Snowflake's data:FIELD path lookup is case-insensitive, Spark's
-        # from_json is not — uppercase every key (recursively) at ingest to
-        # match the Execute convention of uppercase schema field names.
-        # Metadata keys ($TYPE, DOCUMENT_ID, ...) are already uppercase.
-        raw = _uppercase_json_keys(raw)
-
-    meta = raw.select(
-        F.from_json(F.col("value"), _META_STRUCT).alias("m"),
-        F.col("value").alias("data"),
-    )
-    # Parse-skip path: malformed JSON (null struct) or records missing the
-    # required identity fields are dropped, like the reference logs-and-skips.
-    meta = meta.filter(
-        F.col("m").isNotNull()
-        & F.col("m.$TYPE").isNotNull()
-        & F.col("m.DOCUMENT_ID").isNotNull()
-        & F.col("m.$VERSION").isNotNull()
-    )
-
-    landed = meta.select(
-        F.lit(batch_date).cast(T.TimestampType()).alias("batch_date"),
-        F.col("m.$TYPE").alias("type"),
-        F.col("m.DOCUMENT_ID").alias("id"),
-        F.col("m.$VERSION").cast(T.LongType()).alias("version"),
-        F.lit(0).cast(T.IntegerType()).alias("chunk"),
-        F.col("m.$AUTHOR_ID").alias("author"),
-        F.to_timestamp(F.col("m.$DATE")).alias("date"),
-        F.coalesce(F.col("m.$DELETED"), F.lit(False)).alias("deleted"),
-        F.col("data"),
-    )
-
-    if chunk_size:
-        landed = _apply_chunking(landed, chunk_size)
-
-    # In-batch idempotency on the logical PK (SURVEY §4 P10): if the same
-    # (type,id,version,chunk) appears twice within one batch, keep one copy.
-    return landed.dropDuplicates(["type", "id", "version", "chunk"]).select(*LANDING_COLUMNS)
-
-
-def _uppercase_json_keys(raw: DataFrame) -> DataFrame:
-    """Uppercase JSON object keys recursively (Arrow-batched; runs once at
-    ingest, never in the query path). Malformed lines pass through untouched
-    for the normal parse-skip path."""
-
-    def upper_keys(obj):
-        if isinstance(obj, dict):
-            return {k.upper() if isinstance(k, str) else k: upper_keys(v) for k, v in obj.items()}
-        if isinstance(obj, list):
-            return [upper_keys(v) for v in obj]
-        return obj
+def _split_lines(raw: DataFrame, chunk_size: int | None, uppercase_keys: bool) -> DataFrame:
+    """``split_document`` over a distributed ``value`` column, Arrow-batched
+    in place, so the input keeps its partitioning."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for line in pdf["value"]:
-                try:
-                    out.append(json.dumps(upper_keys(json.loads(line)), separators=(",", ":")))
-                except (json.JSONDecodeError, TypeError):
-                    out.append(line)
-            yield pd.DataFrame({"value": out})
+            parts = [split_document(v, chunk_size, uppercase_keys) for v in pdf["value"]]
+            yield pd.DataFrame({"value": pdf["value"], "parts": parts})
 
-    return raw.mapInPandas(run, schema="value string")
+    return raw.mapInPandas(run, schema=_SPLIT_SCHEMA)
 
 
-def _apply_chunking(landed: DataFrame, chunk_size: int) -> DataFrame:
-    """Compat chunk-split (snowflake.go:167-194): each top-level key whose
-    value is a JSON array longer than ``chunk_size`` is sliced out of the
-    document into extra rows {DOCUMENT_ID, key: slice} with chunk = 1..n."""
+def _land(raw: DataFrame, batch_date: datetime, chunk_size: int | None, uppercase_keys: bool = False) -> DataFrame:
+    """Land a ``value`` column of NDJSON lines. With chunking or uppercasing
+    on, ``raw`` may carry the lines' ``split_document`` output as ``parts``;
+    it is computed here when it does not.
 
-    result_schema = LANDING_SCHEMA
+    The plan is built from SQL expression strings: a sync page pays this
+    construction on every commit, and one string per step costs one Py4J
+    call where the Column form costs one per sub-expression."""
+    _check_chunk_size(chunk_size)
+    if batch_date.tzinfo is None:
+        batch_date = batch_date.replace(tzinfo=timezone.utc)
 
-    def split_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = []
-            for row in pdf.itertuples(index=False):
-                rec = dict(zip(pdf.columns, row))
-                try:
-                    doc = json.loads(rec["data"])
-                except (json.JSONDecodeError, TypeError):
-                    out_rows.append(rec)
-                    continue
-                chunks = []
-                for key in sorted(k for k in doc if isinstance(doc[k], list)):
-                    value = doc[key]
-                    if len(value) > chunk_size:
-                        for i in range(0, len(value), chunk_size):
-                            chunks.append({"DOCUMENT_ID": doc.get("DOCUMENT_ID"), key: value[i : i + chunk_size]})
-                        del doc[key]
-                if chunks:
-                    rec = dict(rec)
-                    rec["data"] = json.dumps(doc, separators=(",", ":"))
-                out_rows.append(rec)
-                for i, chunk_doc in enumerate(chunks, start=1):
-                    crec = dict(rec)
-                    crec["chunk"] = i
-                    crec["data"] = json.dumps(chunk_doc, separators=(",", ":"))
-                    out_rows.append(crec)
-            yield pd.DataFrame(out_rows, columns=list(pdf.columns))
+    split = chunk_size is not None or uppercase_keys
+    if split:
+        if "parts" not in raw.columns:
+            raw = _split_lines(raw, chunk_size, uppercase_keys)
+        # metadata comes from the document row; chunk rows inherit it
+        doc, rows = "coalesce(element_at(parts, 1), value)", "coalesce(parts, array(value))"
+    else:
+        doc = rows = "value"
 
-    return landed.mapInPandas(split_batches, schema=result_schema)
+    meta = raw.selectExpr(f"from_json({doc}, '{_META_DDL}') AS m", f"{rows} AS data").where(
+        # Parse-skip path: malformed JSON (null struct) or records missing the
+        # required identity fields are dropped, like the reference logs-and-skips.
+        "m IS NOT NULL AND m.`$TYPE` IS NOT NULL AND m.DOCUMENT_ID IS NOT NULL AND m.`$VERSION` IS NOT NULL"
+    )
+    if split:
+        meta = meta.selectExpr("m", "posexplode(data) AS (chunk, data)")
+    else:
+        meta = meta.selectExpr("m", "0 AS chunk", "data")
+
+    landed = meta.selectExpr(
+        f"timestamp_micros({(batch_date - _EPOCH) // timedelta(microseconds=1)}) AS batch_date",
+        "m.`$TYPE` AS type",
+        "m.DOCUMENT_ID AS id",
+        "CAST(m.`$VERSION` AS BIGINT) AS version",
+        "chunk",
+        "m.`$AUTHOR_ID` AS author",
+        "to_timestamp(m.`$DATE`) AS date",
+        "coalesce(m.`$DELETED`, false) AS deleted",
+        "data",
+    )
+
+    # In-batch idempotency on the logical PK (SURVEY §4 P10): if the same
+    # (type,id,version,chunk) appears twice within one batch, keep one copy.
+    return landed.dropDuplicates(["type", "id", "version", "chunk"])

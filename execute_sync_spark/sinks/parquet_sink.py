@@ -13,6 +13,7 @@ by (id, version) so D1/D2 shuffles read locally-sorted input.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -252,6 +253,7 @@ class ParquetSink:
                 os.rename(os.path.join(tmp, f), os.path.join(part_dir, f))
                 moved += 1
             shutil.rmtree(tmp, ignore_errors=True)
-            key = os.path.basename(part_dir).removeprefix("type=")
+            # Spark escapes the value in the directory name ('A:B' -> A%3AB)
+            key = unquote(os.path.basename(part_dir).removeprefix("type="))
             results[key] = len(files) - moved
         return results

@@ -1,6 +1,8 @@
 """The sync orchestration (SURVEY §3.1): fetch pages -> land -> sink ->
-commit watermark. The driver loop is intentionally tiny — all heavy lifting
-(parse, shred, dedup, write) is distributed Spark work.
+commit watermark. The driver loop is intentionally tiny: a page is already a
+Python list on the driver, so the optional compat chunk-split runs there, per
+line, before the upload (like the reference's client, snowflake.go:167-194);
+everything else (parse, shred, dedup, write) is Spark work, one job per page.
 
 Crash-consistency contract (cmd_sync.go:175-177): the watermark is persisted
 only AFTER the sink append succeeds, so a crash between append and save

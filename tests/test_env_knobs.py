@@ -73,3 +73,29 @@ def test_bench_enc_sec_never_prints_zero():
     assert bench._enc_sec(0.001) == 0.01
     assert bench._enc_sec(0.004) == 0.01
     assert bench._enc_sec(0.016) == 0.02
+
+
+@pytest.mark.parametrize("size", ["0", "-3"])
+def test_compat_chunk_size_below_one_is_rejected(monkeypatch, tmp_path, size):
+    """A size below 1 used to turn chunking off (0) or do nothing (< 0)."""
+    from execute_sync_spark.config import resolve_config
+
+    env_file = str(tmp_path / "absent.env")
+    monkeypatch.setenv("EXECUTESYNC_CHUNK_SIZE", size)
+    with pytest.raises(ValueError, match="CHUNK_SIZE"):
+        resolve_config({"compat_chunking": True}, env_file=env_file)
+    # with chunking off the size is never used
+    assert resolve_config(env_file=env_file).chunk_size == int(size)
+
+
+@pytest.mark.parametrize("size", [0, -1])
+def test_landing_rejects_chunk_size_below_one(size):
+    from datetime import datetime
+
+    from execute_sync_spark.landing.ingest import _land, land_ndjson_lines
+
+    # rejected before any Spark call, so no session is needed
+    with pytest.raises(ValueError, match="chunk size"):
+        land_ndjson_lines(None, ['{"$TYPE":"A"}'], datetime(2026, 1, 1), chunk_size=size)
+    with pytest.raises(ValueError, match="chunk size"):
+        _land(None, datetime(2026, 1, 1), size)

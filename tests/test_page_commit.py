@@ -1,7 +1,7 @@
-"""A sync page commits in two Spark jobs: the page is landed as a local
-Arrow relation, and the sink counts the rows it writes with an
-``Observation`` instead of reading them back. Jobs are counted through a
-job group and the status tracker."""
+"""A sync page commits in one Spark job: the page is landed as a local
+Arrow relation in one partition, split where it already is, and the sink
+counts the rows it writes with an ``Observation`` instead of reading them
+back. Jobs are counted through a job group and the status tracker."""
 
 import logging
 import threading
@@ -34,18 +34,21 @@ def _fill(spark, sink):
 
 
 def test_page_lands_as_local_relation(spark):
-    df = land_ndjson_lines(spark, feed.batch_lines()[0], feed.BATCH_DATES[0])
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    """Chunked or not, the page runs no Python worker and no shuffle."""
+    for chunk_size in (None, feed.CHUNK_SIZE):
+        df = land_ndjson_lines(spark, feed.batch_lines()[1], feed.BATCH_DATES[1], chunk_size=chunk_size)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert not any(op in plan for op in ("MapInPandas", "PythonMapInArrow", "Exchange")), plan
 
 
-def test_append_runs_two_jobs_and_counts_what_it_wrote(spark, tmp_path):
+def test_append_runs_one_job_and_counts_what_it_wrote(spark, tmp_path):
     sink = ParquetSink(spark, str(tmp_path / "wh"))
     total = 0
     for lines, bd in zip(feed.batch_lines(), feed.BATCH_DATES):
         landed = land_ndjson_lines(spark, lines, bd, chunk_size=feed.CHUNK_SIZE)
         n, jobs = _jobs(spark, lambda: sink.append(landed, txn_id=str(bd)))
-        assert jobs <= 2, jobs
+        assert jobs == 1, jobs
         total += n
     assert total == 4 + 8 + 2  # valid docs incl. chunk rows (see test_landing)
     assert sink.read().count() == total
@@ -107,7 +110,7 @@ def test_sync_once_logs_each_page(spark, tmp_path, caplog):
     n, jobs = _jobs(spark, lambda: sync_once(spark, FileFeedSource(str(feed_dir)), sink, state))
     pages = [r.sync_page for r in caplog.records if hasattr(r, "sync_page")]
     assert [p["rows_appended"] for p in pages] == [4, 5, 2] and n == 11
-    assert jobs <= 2 * len(pages), jobs
+    assert jobs <= len(pages), jobs
     marks = [p["watermark_after"] for p in pages]
     assert marks == ["batch_1.ndjson", "batch_2.ndjson", "batch_3.ndjson"]
     assert [p["watermark_before"] for p in pages[1:]] == marks[:-1]

@@ -206,3 +206,17 @@ def test_incremental_refresh_survives_escaped_partition_values(spark, tmp_path):
     snap = {(r.type, r.version) for r in sink.read_latest().collect()}
     assert snap == {(r.type, r.version) for r in latest(sink.read()).collect()}
     assert snap == {("A:B", 2)}
+
+
+def test_compact_files_keys_escaped_types_by_type_value(spark, tmp_path):
+    """compact_files returns {type: files_removed} keyed by the type value,
+    not by the directory name Spark escapes it to (':' -> %3A)."""
+    import json
+    from datetime import datetime
+
+    doc = json.dumps({"$TYPE": "A:B", "DOCUMENT_ID": "x", "$VERSION": 1, "$AUTHOR_ID": "u-1",
+                      "$DATE": "2026-03-01T00:00:00Z", "$DELETED": False})
+    sink = ParquetSink(spark, str(tmp_path / "wh"))
+    for day in (1, 2, 3):
+        sink.append(land_ndjson_lines(spark, [doc], datetime(2026, 3, day)))
+    assert sink.compact_files() == {"A:B": 2}

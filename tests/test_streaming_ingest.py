@@ -35,6 +35,22 @@ def test_stream_sync_discovers_and_checkpoints(spark, tmp_path):
     assert sink.read().count() == total + 1
 
 
+def test_stream_sync_splits_oversized_lists(spark, tmp_path):
+    """A stream splits its lines in one ``mapInPandas`` over each micro-batch
+    and lands the same rows a sync page does."""
+    feed_dir = tmp_path / "spool"
+    feed_dir.mkdir()
+    feed.write_batches(feed_dir)
+    sink = ParquetSink(spark, str(tmp_path / "wh"))
+
+    stream_sync(spark, str(feed_dir), sink, str(tmp_path / "ckpt"), chunk_size=feed.CHUNK_SIZE)
+    landed = sink.read()
+    assert landed.count() == 4 + 8 + 2  # tkt-0001's 25 LINES -> chunk 0 + 3 chunk rows
+    tkt = landed.filter(F.col("id") == "tkt-0001").orderBy("chunk").collect()
+    assert [r.chunk for r in tkt] == [0, 1, 2, 3]
+    assert [len(json.loads(r.data)["LINES"]) for r in tkt[1:]] == [10, 10, 5]
+
+
 def test_txn_append_idempotent(spark, tmp_path):
     sink = ParquetSink(spark, str(tmp_path / "wh_txn"))
     landed = land_ndjson_lines(spark, feed.batch_lines()[0], feed.BATCH_DATES[0])
