@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import sys
 
 from execute_sync_spark import __version__
@@ -90,6 +91,10 @@ def main(argv: list[str] | None = None) -> int:
 
     cfg = resolve_config({k: v for k, v in vars(args).items()
                           if k not in ("command", "max_iterations", "dialect", "dry_run")})
+    # per-page sync records are INFO: without a handler and a level they
+    # never reach stderr
+    logging.basicConfig(format="%(asctime)s %(levelname)s %(name)s: %(message)s")
+    logging.getLogger("execute_sync_spark").setLevel(cfg.log_level.upper())
 
     if args.command == "version":
         print(__version__)

@@ -61,9 +61,17 @@ class Config:
         return out
 
 
-def _coerce(value: str, target_type: type):
+_TRUE = ("1", "true", "yes", "on")
+_FALSE = ("", "0", "false", "no", "off")
+_LOG_LEVELS = ("debug", "info", "warn", "warning", "error", "critical")
+
+
+def _coerce(name: str, value: str, target_type: type):
     if target_type is bool:
-        return value.strip().lower() in ("1", "true", "yes", "on")
+        word = value.strip().lower()
+        if word not in _TRUE + _FALSE:
+            raise ValueError(f"{name} must be empty or one of {'/'.join(_TRUE + _FALSE[1:])}, got {value!r}")
+        return word in _TRUE
     if target_type is int:
         return int(value)
     return value
@@ -112,10 +120,12 @@ def resolve_config(cli_overrides: Optional[dict] = None,
             if raw is None:
                 raw = file_env.get(_ENV_PREFIX + env_name)
             if raw is not None:
-                setattr(cfg, f.name, _coerce(raw, f.type if isinstance(f.type, type) else type(getattr(cfg, f.name))))
+                setattr(cfg, f.name, _coerce(_ENV_PREFIX + env_name, raw, type(getattr(cfg, f.name))))
     for key, value in (cli_overrides or {}).items():
         if value is not None and hasattr(cfg, key):
             setattr(cfg, key, value)
+    if cfg.log_level.lower() not in _LOG_LEVELS:
+        raise ValueError(f"{_ENV_PREFIX}LOG_LEVEL must be one of {'/'.join(_LOG_LEVELS)}, got {cfg.log_level!r}")
     if cfg.compat_chunking and cfg.chunk_size < 1:
         raise ValueError(f"{_ENV_PREFIX}CHUNK_SIZE must be at least 1 with compat chunking, got {cfg.chunk_size}")
     # SQLite-style default DSN under state dir (config.go:132-136 analog)

@@ -9,12 +9,12 @@ row skipped, matching the reference's parse-skip path,
 ``data`` payload.
 
 Compat chunk-splitting (§1.4, default OFF — Spark has no cell-size ceiling)
-and key uppercasing are one pure per-line function, ``split_document``. Like
-the reference, which splits in the client process that holds the page
-before the upload (snowflake.go:167-194), a sync page is split where it
-already is, on the driver, and ships as ``(value, parts)``; distributed
-inputs (files, streams) compute ``parts`` in one Arrow-batched
-``mapInPandas``. The reshape (1 doc -> 1 + n rows) is a JVM ``posexplode``.
+is one pure per-line function, ``split_document``. Like the reference, which
+splits in the client process that holds the page before the upload
+(snowflake.go:167-194), a sync page is split where it already is, on the
+driver, and ships as ``(value, parts)``; a stream computes ``parts`` in one
+Arrow-batched ``mapInPandas``. The reshape (1 doc -> 1 + n rows) is a JVM
+``posexplode``.
 Deviation from the reference: the reference iterates Go map keys in random
 order when several lists in one document overflow (snowflake.go:169-190); we
 sort keys so chunk numbering is deterministic.
@@ -49,30 +49,19 @@ def _check_chunk_size(chunk_size: int | None) -> None:
         raise ValueError(f"chunk size must be at least 1 or None (off), got {chunk_size}")
 
 
-def _upper_keys(obj):
-    if isinstance(obj, dict):
-        return {k.upper() if isinstance(k, str) else k: _upper_keys(v) for k, v in obj.items()}
-    if isinstance(obj, list):
-        return [_upper_keys(v) for v in obj]
-    return obj
-
-
-def split_document(line: str, chunk_size: int | None, uppercase_keys: bool = False) -> list[str] | None:
+def split_document(line: str, chunk_size: int | None) -> list[str] | None:
     """The landing rows of one NDJSON line: ``[document, chunk 1, ...]``, or
     None when the line lands unchanged as its only row.
 
     Compat chunk-split (snowflake.go:167-194): each top-level key whose value
     is a JSON array longer than ``chunk_size`` is sliced out of the document
-    into extra rows ``{DOCUMENT_ID, key: slice}``, keys in sorted order. With
-    ``uppercase_keys`` every object key is uppercased first, recursively:
-    Snowflake's ``data:FIELD`` lookup is case-insensitive, Spark's
-    ``from_json`` is not, and Execute schema field names are uppercase.
+    into extra rows ``{DOCUMENT_ID, key: slice}``, keys in sorted order.
 
     Runs before the metadata filter, so a line that is not a JSON object,
     or not JSON at all, returns None for the parse-skip path to drop."""
     # a list of more than chunk_size items holds at least chunk_size commas,
     # so a line with fewer cannot split and needs no parse
-    if not uppercase_keys and (chunk_size is None or line.count(",") < chunk_size):
+    if chunk_size is None or line.count(",") < chunk_size:
         return None
     try:
         doc = json.loads(line)
@@ -80,17 +69,14 @@ def split_document(line: str, chunk_size: int | None, uppercase_keys: bool = Fal
         return None
     if not isinstance(doc, dict):
         return None
-    if uppercase_keys:
-        doc = _upper_keys(doc)
     chunks = []
-    if chunk_size is not None:
-        for key in sorted(k for k in doc if isinstance(doc[k], list)):
-            value = doc[key]
-            if len(value) > chunk_size:
-                for i in range(0, len(value), chunk_size):
-                    chunks.append({"DOCUMENT_ID": doc.get("DOCUMENT_ID"), key: value[i : i + chunk_size]})
-                del doc[key]
-    if not chunks and not uppercase_keys:
+    for key in sorted(k for k in doc if isinstance(doc[k], list)):
+        value = doc[key]
+        if len(value) > chunk_size:
+            for i in range(0, len(value), chunk_size):
+                chunks.append({"DOCUMENT_ID": doc.get("DOCUMENT_ID"), key: value[i : i + chunk_size]})
+            del doc[key]
+    if not chunks:
         return None
     return [json.dumps(d, separators=(",", ":")) for d in [doc, *chunks]]
 
@@ -100,7 +86,6 @@ def land_ndjson_lines(
     lines: Iterable[str],
     batch_date: datetime,
     chunk_size: int | None = None,
-    uppercase_keys: bool = False,
 ) -> DataFrame:
     """Land an in-memory iterable of NDJSON lines (one sync page).
 
@@ -112,46 +97,31 @@ def land_ndjson_lines(
     in-batch dedup plans with no shuffle and an append is one Spark job."""
     _check_chunk_size(chunk_size)
     values = [l for l in lines if l.strip()]
-    if chunk_size is None and not uppercase_keys:
+    if chunk_size is None:
         page, schema = pd.DataFrame({"value": values}, dtype=object), "value string"
     else:
-        parts = [split_document(v, chunk_size, uppercase_keys) for v in values]
+        parts = [split_document(v, chunk_size) for v in values]
         page, schema = pd.DataFrame({"value": values, "parts": parts}, dtype=object), _SPLIT_SCHEMA
     df = spark.createDataFrame(page, schema).coalesce(1)
-    return _land(df, batch_date, chunk_size, uppercase_keys)
+    return _land(df, batch_date, chunk_size)
 
 
-def land_ndjson_files(
-    spark: SparkSession,
-    paths: str | list[str],
-    batch_date: datetime,
-    chunk_size: int | None = None,
-    uppercase_keys: bool = False,
-) -> DataFrame:
-    """Land NDJSON files (one JSON document per line) as one batch.
-
-    ``paths`` may be a glob; reading is fully distributed.
-    """
-    df = spark.read.text(paths)
-    return _land(df, batch_date, chunk_size, uppercase_keys)
-
-
-def _split_lines(raw: DataFrame, chunk_size: int | None, uppercase_keys: bool) -> DataFrame:
+def _split_lines(raw: DataFrame, chunk_size: int) -> DataFrame:
     """``split_document`` over a distributed ``value`` column, Arrow-batched
     in place, so the input keeps its partitioning."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            parts = [split_document(v, chunk_size, uppercase_keys) for v in pdf["value"]]
+            parts = [split_document(v, chunk_size) for v in pdf["value"]]
             yield pd.DataFrame({"value": pdf["value"], "parts": parts})
 
     return raw.mapInPandas(run, schema=_SPLIT_SCHEMA)
 
 
-def _land(raw: DataFrame, batch_date: datetime, chunk_size: int | None, uppercase_keys: bool = False) -> DataFrame:
-    """Land a ``value`` column of NDJSON lines. With chunking or uppercasing
-    on, ``raw`` may carry the lines' ``split_document`` output as ``parts``;
-    it is computed here when it does not.
+def _land(raw: DataFrame, batch_date: datetime, chunk_size: int | None) -> DataFrame:
+    """Land a ``value`` column of NDJSON lines. With chunking on, ``raw``
+    may carry the lines' ``split_document`` output as ``parts``; it is
+    computed here when it does not.
 
     The plan is built from SQL expression strings: a sync page pays this
     construction on every commit, and one string per step costs one Py4J
@@ -160,10 +130,10 @@ def _land(raw: DataFrame, batch_date: datetime, chunk_size: int | None, uppercas
     if batch_date.tzinfo is None:
         batch_date = batch_date.replace(tzinfo=timezone.utc)
 
-    split = chunk_size is not None or uppercase_keys
+    split = chunk_size is not None
     if split:
         if "parts" not in raw.columns:
-            raw = _split_lines(raw, chunk_size, uppercase_keys)
+            raw = _split_lines(raw, chunk_size)
         # metadata comes from the document row; chunk rows inherit it
         doc, rows = "coalesce(element_at(parts, 1), value)", "coalesce(parts, array(value))"
     else:

@@ -5,9 +5,4 @@ from execute_sync_spark.operators.dedup import (  # noqa: F401
     prune_parquet,
 )
 from execute_sync_spark.operators.views import create_views  # noqa: F401
-from execute_sync_spark.operators.catalog import (  # noqa: F401
-    register_landing_table,
-    materialize_views,
-    drop_database,
-)
 from execute_sync_spark.operators.rollup import HourlyRollup  # noqa: F401

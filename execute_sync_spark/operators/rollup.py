@@ -19,8 +19,8 @@ regardless of log size.
 ``read()`` folds the partials (sum of sums/counts — associative, the rule
 for any incrementally-maintained aggregate); ``compact()`` collapses a
 day's accumulated batch partials into one, the OPTIMIZE analog for
-long-lived rollups. (Contrast ``ParquetSink.refresh_latest``, which must
-re-read the log because D2 latest-version is NOT additive.)
+long-lived rollups. (Contrast the D2 latest-version view, which is NOT
+additive: keeping it fresh means re-reading the log.)
 
 Commit-protocol constraint (ADVICE r6, interface r10): every commit
 metadata operation — directory swaps, aside/staging dirs, the

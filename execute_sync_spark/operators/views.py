@@ -15,10 +15,8 @@ sqlite.go:200-270). Semantics per node (SURVEY §2.V):
   V5  RECORD -> child view <parent>_<field> over the deeper struct path (1:1)
   V6  RECORD LIST -> child view = explode over ALL chunk rows; RECORD children
       under a list item recurse with the same explode
-  V7  unknown types / list-in-list skipped with a warning (parity default;
-      ``nested_lists=True`` is an opt-in EXTENSION that shreds arbitrary
-      list depth via chained explodes, carrying PARENT_LISTITEM_ID — Spark
-      has no list-in-list limit, the reference dialects do)
+  V7  unknown types / list-in-list skipped with a warning, as in every
+      reference dialect (snowflake.go:351-356)
 
 Deviations from the reference (deliberate, documented):
 - BOOLEAN stays BooleanType (Snowflake casts to int, snowflake.go:343-344);
@@ -57,6 +55,7 @@ from execute_sync_spark.schema.model import (
 log = logging.getLogger(__name__)
 
 _PARSED = "__parsed"
+_ITEM = "__item"
 _META_COLS = [
     ("deleted", "_DELETED"),
     ("author", "_AUTHOR"),
@@ -65,49 +64,30 @@ _META_COLS = [
 ]
 
 
-def create_views(
-    latest_df: DataFrame,
-    root: RootSchema,
-    register: bool = True,
-    prefix: str = "",
-    nested_lists: bool = False,
-) -> dict[str, DataFrame]:
+def create_views(latest_df: DataFrame, root: RootSchema, register: bool = True) -> dict[str, DataFrame]:
     """Compile the whole view forest over the D2 (``_LATEST``) DataFrame.
 
     Returns {view_name: DataFrame}; with ``register`` each is also registered
     as a temp view so it is queryable via spark.sql.
-
-    ``nested_lists`` (opt-in EXTENSION — default keeps reference parity):
-    every reference dialect skips RECORD LIST inside RECORD LIST with a
-    warning (snowflake.go:351-356); Spark's explode has no such limit. When
-    enabled, an inner list becomes a further-exploded child view named
-    ``<outer_view>_<field>`` carrying PARENT_LISTITEM_ID (the outer item's
-    LISTITEM_ID) next to its own LISTITEM_ID, so rows key back to the outer
-    list row. Arbitrary depth.
     """
     views: dict[str, DataFrame] = {}
     for doc_type, doc_schema in root.items():
-        struct = doc_type_struct(doc_schema, nested_lists=nested_lists)
+        struct = doc_type_struct(doc_schema)
         parsed = latest_df.filter(F.col("type") == doc_type).withColumn(
             _PARSED, F.from_json(F.col("data"), struct)
         )
         _build_node(
             views,
             parsed,
-            view_name=f"{prefix}{doc_type}",
+            view_name=doc_type,
             record=doc_schema,
             path=F.col(_PARSED),
             is_root=True,
-            flattened=False,
-            nested_lists=nested_lists,
         )
     if register:
         for name, df in views.items():
             df.createOrReplaceTempView(name)
     return views
-
-
-PARENT_LISTITEM_ID = "PARENT_LISTITEM_ID"
 
 
 def _build_node(
@@ -117,23 +97,19 @@ def _build_node(
     record: DocumentSchema,
     path: Column,
     is_root: bool,
-    flattened: bool,
     listitem_col: Column | None = None,
-    nested_lists: bool = False,
-    parent_listitem_col: Column | None = None,
-    depth: int = 0,
 ) -> None:
     """Emit one view and recurse into RECORD / RECORD LIST children.
 
     ``path`` is the struct-valued Column this node's fields live under —
-    ``__parsed`` for roots, ``__parsed.A.B`` for nested records,
-    ``__item.A`` for a record nested under an exploded list item (in which
-    case ``listitem_col`` carries the item's LISTITEM_ID).
+    ``__parsed`` for roots, ``__parsed.A.B`` for nested records, ``__item``
+    for an exploded list item and ``__item.A`` for a record under it (in
+    the last two cases ``parsed`` is the exploded frame and
+    ``listitem_col`` carries the item's LISTITEM_ID).
     """
+    flattened = listitem_col is not None
     cols: list[Column] = [F.col("id").alias("DOCUMENT_ID")]
-    if parent_listitem_col is not None:
-        cols.append(parent_listitem_col.alias(PARENT_LISTITEM_ID))
-    if listitem_col is not None:
+    if flattened:
         cols.append(listitem_col.alias(LISTITEM_ID))
     if is_root:
         cols.extend(F.col(src).alias(dst) for src, dst in _META_COLS)
@@ -153,27 +129,23 @@ def _build_node(
                 record=meta.record_type or {},
                 path=path[field],
                 is_root=False,
-                flattened=flattened,
                 listitem_col=listitem_col,
-                nested_lists=nested_lists,
-                parent_listitem_col=parent_listitem_col,
-                depth=depth,
             )
         elif meta.type == T_RECORD_LIST:
-            if flattened and not nested_lists:
+            if flattened:
                 log.warning("skipping %s_%s: list-in-list unsupported", view_name, field)
                 continue
-            _build_list_node(
+            # V6: explode across ALL chunk rows — a logical list is the union
+            # of its chunk slices (§1.4)
+            item = F.col(_ITEM)
+            _build_node(
                 views,
-                parsed,
-                f"{view_name}_{field}",
-                path[field],
-                meta.record_type or {},
-                nested_lists=nested_lists,
-                parent_listitem_col=listitem_col,
-                # a flattened source already carries __item{depth}: the new
-                # explode must take the next alias slot
-                depth=depth + 1 if flattened else depth,
+                parsed.select(F.col("id"), F.explode(path[field]).alias(_ITEM)),
+                view_name=f"{view_name}_{field}",
+                record=meta.record_type or {},
+                path=item,
+                is_root=False,
+                listitem_col=item[LISTITEM_ID],
             )
         else:
             log.warning("skipping %s.%s of unknown type %s", view_name, field, meta.type)
@@ -185,76 +157,3 @@ def _build_node(
         # order — we last-win deterministically (schema order) and warn.
         log.warning("view name collision: %s redefined (path-name ambiguity)", view_name)
     views[view_name] = base.select(*cols)
-
-
-def _build_list_node(
-    views: dict[str, DataFrame],
-    source: DataFrame,
-    view_name: str,
-    list_col: Column,
-    record: DocumentSchema,
-    nested_lists: bool = False,
-    parent_listitem_col: Column | None = None,
-    depth: int = 0,
-) -> None:
-    """V6: explode a RECORD LIST across ALL chunk rows (a logical list is the
-    union of its chunk slices — §1.4), then emit the item view and recurse
-    into RECORD children of the item.
-
-    With ``nested_lists`` a RECORD LIST inside the item recurses here again
-    (depth+1): the inner explode runs over the ALREADY-exploded outer items,
-    and the outer item's LISTITEM_ID is carried as PARENT_LISTITEM_ID —
-    shuffle-free fan-out at every level (explode is a Generate, no exchange).
-    """
-    item_alias = f"__item{depth}" if depth else "__item"
-    sel: list[Column] = [F.col("id")]
-    if parent_listitem_col is not None:
-        sel.append(parent_listitem_col.alias(f"__pli{depth}"))
-    exploded = source.select(*sel, F.explode(list_col).alias(item_alias))
-    item = F.col(item_alias)
-
-    cols: list[Column] = [F.col("id").alias("DOCUMENT_ID")]
-    if parent_listitem_col is not None:
-        cols.append(F.col(f"__pli{depth}").alias(PARENT_LISTITEM_ID))
-    cols.append(item[LISTITEM_ID].alias(LISTITEM_ID))
-    for fname, meta in record.items():
-        if fname == "DOCUMENT_ID":
-            continue
-        if meta.type in SCALAR_TYPES:
-            cols.append(item[fname].alias(fname))
-        elif meta.type == T_DOCUMENT:
-            cols.append(item[fname]["DOCUMENT_ID"].alias(fname))
-        elif meta.type == T_RECORD:
-            _build_node(
-                views,
-                exploded,
-                view_name=f"{view_name}_{fname}",
-                record=meta.record_type or {},
-                path=item[fname],
-                is_root=False,
-                flattened=True,
-                listitem_col=item[LISTITEM_ID],
-                nested_lists=nested_lists,
-                parent_listitem_col=(
-                    F.col(f"__pli{depth}") if parent_listitem_col is not None else None
-                ),
-                depth=depth,
-            )
-        elif meta.type == T_RECORD_LIST:
-            if nested_lists:
-                _build_list_node(
-                    views,
-                    exploded,
-                    f"{view_name}_{fname}",
-                    item[fname],
-                    meta.record_type or {},
-                    nested_lists=True,
-                    parent_listitem_col=item[LISTITEM_ID],
-                    depth=depth + 1,
-                )
-            else:
-                log.warning("skipping %s_%s: list-in-list unsupported", view_name, fname)
-        else:
-            log.warning("skipping %s.%s of unknown type %s", view_name, fname, meta.type)
-
-    views[view_name] = exploded.select(*cols)

@@ -8,5 +8,4 @@ from execute_sync_spark.schema.model import (  # noqa: F401
 from execute_sync_spark.schema.compiler import (  # noqa: F401
     SCALAR_TYPE_MAP,
     doc_type_struct,
-    landing_data_struct,
 )

@@ -34,7 +34,6 @@ from execute_sync_spark.schema.model import (
     T_RECORD_LIST,
     DocumentSchema,
     FieldMetadata,
-    RootSchema,
 )
 
 log = logging.getLogger(__name__)
@@ -59,9 +58,7 @@ def _scalar_type(meta: FieldMetadata) -> T.DataType:
     return SCALAR_TYPE_MAP[meta.type]
 
 
-def _field_type(
-    meta: FieldMetadata, *, in_list: bool, nested_lists: bool = False
-) -> T.DataType | None:
+def _field_type(meta: FieldMetadata, *, in_list: bool) -> T.DataType | None:
     """DataType for one field, or None if the field must be skipped."""
     if meta.type in SCALAR_TYPES:
         return _scalar_type(meta)
@@ -70,48 +67,30 @@ def _field_type(
         # view layer can surface FIELD.DOCUMENT_ID as a joinable FK column.
         return T.StructType([T.StructField("DOCUMENT_ID", T.StringType(), True)])
     if meta.type == T_RECORD:
-        return _record_struct(meta.record_type or {}, in_list=in_list, nested_lists=nested_lists)
+        return _record_struct(meta.record_type or {}, in_list=in_list)
     if meta.type == T_RECORD_LIST:
-        if in_list and not nested_lists:
+        if in_list:
             # list-in-list is explicitly unsupported by every reference view
-            # generator (snowflake.go:351-356) — skip with a warning. Spark
-            # has no such limit: nested_lists=True (an opt-in extension)
-            # parses and shreds arbitrary list depth (views.create_views).
+            # generator (snowflake.go:351-356) — skip with a warning
             log.warning("skipping nested RECORD LIST field %s (list-in-list unsupported)", meta.name)
             return None
-        return T.ArrayType(
-            _record_struct(
-                meta.record_type or {}, in_list=True, with_listitem_id=True,
-                nested_lists=nested_lists,
-            )
-        )
+        return T.ArrayType(_record_struct(meta.record_type or {}, in_list=True, with_listitem_id=True))
     log.warning("skipping field %s: unhandled type %s", meta.name, meta.type)
     return None
 
 
-def _record_struct(
-    doc: DocumentSchema,
-    *,
-    in_list: bool,
-    with_listitem_id: bool = False,
-    nested_lists: bool = False,
-) -> T.StructType:
+def _record_struct(doc: DocumentSchema, *, in_list: bool, with_listitem_id: bool = False) -> T.StructType:
     fields: list[T.StructField] = []
     if with_listitem_id:
         fields.append(T.StructField(LISTITEM_ID, T.StringType(), True))
     for fname, fmeta in doc.items():
-        dtype = _field_type(fmeta, in_list=in_list, nested_lists=nested_lists)
+        dtype = _field_type(fmeta, in_list=in_list)
         if dtype is None:
             continue
         fields.append(T.StructField(fname, dtype, fmeta.nullable))
     return T.StructType(fields)
 
 
-def doc_type_struct(doc_schema: DocumentSchema, nested_lists: bool = False) -> T.StructType:
+def doc_type_struct(doc_schema: DocumentSchema) -> T.StructType:
     """StructType for the DATA payload of one document type."""
-    return _record_struct(doc_schema, in_list=False, nested_lists=nested_lists)
-
-
-def landing_data_struct(root: RootSchema) -> dict[str, T.StructType]:
-    """Per-doc-type parse schema for from_json over the landing DATA column."""
-    return {doc_type: doc_type_struct(doc) for doc_type, doc in root.items()}
+    return _record_struct(doc_schema, in_list=False)

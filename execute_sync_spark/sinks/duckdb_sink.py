@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from execute_sync_spark.landing.schema import LANDING_COLUMNS
+from execute_sync_spark.sinks.base import register_views
 
 TABLE = "EXECUTE_DOCUMENTS"
 
@@ -77,11 +78,5 @@ class DuckDBSink:
         return self.spark.createDataFrame(pdf, schema=LANDING_SCHEMA)
 
     def create_views(self, root) -> dict:
-        from execute_sync_spark.operators import dedup as dedup_ops
-        from execute_sync_spark.operators.views import create_views as compile_views
-
-        raw = self.read()
-        raw.createOrReplaceTempView(TABLE)
-        d2 = dedup_ops.latest(raw)
-        d2.createOrReplaceTempView(f"{TABLE}_LATEST")
-        return compile_views(d2, root, register=True)
+        """Register EXECUTE_DOCUMENTS[_LATEST[_ALL_VERSIONS]] + the forest."""
+        return register_views(self.read(), root)

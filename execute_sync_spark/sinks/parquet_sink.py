@@ -20,10 +20,8 @@ from pyspark.sql import functions as F
 
 from execute_sync_spark.landing.schema import LANDING_COLUMNS, LANDING_SCHEMA
 from execute_sync_spark.operators import dedup as dedup_ops
-from execute_sync_spark.operators.views import create_views as compile_views
 from execute_sync_spark.schema.model import RootSchema
-
-TABLE_NAME = "EXECUTE_DOCUMENTS"
+from execute_sync_spark.sinks.base import register_views
 
 
 class ParquetSink:
@@ -110,102 +108,16 @@ class ParquetSink:
             .select(*LANDING_COLUMNS)
         )
 
-    def exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            not f.startswith("_") for f in os.listdir(self.path)
-        )
-
     def create_views(self, root: RootSchema) -> dict:
         """Register EXECUTE_DOCUMENTS[_LATEST[_ALL_VERSIONS]] + the forest."""
-        raw = self.read()
-        raw.createOrReplaceTempView(TABLE_NAME)
-        d1 = dedup_ops.latest_all_versions(raw)
-        d1.createOrReplaceTempView(f"{TABLE_NAME}_LATEST_ALL_VERSIONS")
-        d2 = dedup_ops.latest(raw)
-        d2.createOrReplaceTempView(f"{TABLE_NAME}_LATEST")
-        return compile_views(d2, root, register=True)
-
-    def materialize_latest(self) -> str:
-        """P6's second idiom: alongside the query-time dedup views, write a
-        materialized ``_LATEST`` snapshot table for read-heavy workloads —
-        at 100 TB a full-log dedup per query is wasteful; readers hit the
-        snapshot and only the refresh pays the dedup. Refresh here is a full
-        recompute swap (Delta analog: MERGE INTO from new batches only).
-        Returns the snapshot path."""
-        import shutil
-        import uuid
-
-        snap = f"{self.path.rstrip('/')}_latest"
-        tmp = f"{snap}_{uuid.uuid4().hex[:8]}"
-        (
-            dedup_ops.latest(self.read())
-            .write.mode("overwrite")
-            .format(self.file_format)
-            .partitionBy("type")
-            .save(tmp)
-        )
-        if os.path.isdir(snap):
-            shutil.rmtree(snap)
-        os.rename(tmp, snap)
-        return snap
-
-    def refresh_latest(self) -> list[str]:
-        """Incremental snapshot refresh: recompute D2 only for document types
-        touched by batches newer than the snapshot's high-water batch_date,
-        and swap just those type partitions. Untouched partitions are not
-        read or rewritten — at 100 TB a sync touching one doc type refreshes
-        one partition subtree. Falls back to a full materialize when no
-        snapshot exists. Returns the refreshed type list."""
-        snap = f"{self.path.rstrip('/')}_latest"
-        if not os.path.isdir(snap):
-            self.materialize_latest()
-            return ["*"]
-
-        mark_row = self.spark.read.format(self.file_format).load(snap).agg(F.max("batch_date").alias("m")).first()
-        mark = mark_row.m
-        raw = self.read()
-        touched = [
-            r.type
-            for r in raw.filter(F.col("batch_date") > F.lit(mark)).select("type").distinct().collect()
-        ]
-        if not touched:
-            return []
-        # D2 over only the touched types (partition-pruned scan), then swap
-        # those partitions in the snapshot
-        fresh = dedup_ops.latest(raw.filter(F.col("type").isin(touched)))
-        tmp = f"{snap}_delta_{os.getpid()}"
-        fresh.write.mode("overwrite").format(self.file_format).partitionBy("type").save(tmp)
-        dedup_ops.swap_type_partitions(tmp, snap)
-        return touched
-
-    def read_latest(self) -> DataFrame:
-        """Read the materialized snapshot (falls back to the lazy D2 view)."""
-        snap = f"{self.path.rstrip('/')}_latest"
-        if os.path.isdir(snap):
-            return self.spark.read.format(self.file_format).load(snap).select(*LANDING_COLUMNS)
-        return dedup_ops.latest(self.read())
+        return register_views(self.read(), root)
 
     def prune(self) -> int:
-        # preserve txn markers across the compacting rewrite
-        import shutil
-        import tempfile
-
-        txn_dir = os.path.join(self.path, "_txns")
-        saved = None
-        if os.path.isdir(txn_dir):
-            saved = tempfile.mkdtemp(prefix="txns_")
-            shutil.copytree(txn_dir, saved, dirs_exist_ok=True)
-        try:
-            return dedup_ops.prune_parquet(
-                self.spark,
-                self.path,
-                file_format=self.file_format,
-                schema=LANDING_SCHEMA,
-            )
-        finally:
-            if saved is not None:
-                shutil.copytree(saved, txn_dir, dirs_exist_ok=True)
-                shutil.rmtree(saved)
+        """D3 compaction. The rewrite replaces only ``type=*`` partition
+        directories, so the ``_txns/`` markers stay as they are."""
+        return dedup_ops.prune_parquet(
+            self.spark, self.path, file_format=self.file_format, schema=LANDING_SCHEMA
+        )
 
     def compact_files(self, target_mb: int = 128) -> dict[str, int]:
         """Small-file compaction (the Delta OPTIMIZE analog): incremental

@@ -37,7 +37,6 @@ def stream_sync(
 ):
     """Run the streaming ingest; returns the number of batches processed."""
     import hashlib
-    import inspect
 
     raw = (
         spark.readStream.format("text")
@@ -52,15 +51,11 @@ def stream_sync(
     # txn id must be stable across crash replay (batch_id is — Spark reuses
     # the epoch on restart) and distinct across streams sharing a sink
     # (namespace on the checkpoint, the stream's identity)
-    supports_txn = "txn_id" in inspect.signature(sink.append).parameters
     ns = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:8]
 
     def handle(batch_df, batch_id: int):
         landed = _land(batch_df, datetime.now(timezone.utc), chunk_size)
-        if supports_txn:
-            sink.append(landed, txn_id=f"stream-{ns}-{batch_id}")
-        else:
-            sink.append(landed)
+        sink.append(landed, txn_id=f"stream-{ns}-{batch_id}")
         batches["n"] += 1
 
     writer = (

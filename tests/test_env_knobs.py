@@ -1,5 +1,6 @@
 """Environment knobs reject bad values loudly instead of doing nothing."""
 
+import logging
 import os
 
 import pytest
@@ -99,3 +100,60 @@ def test_landing_rejects_chunk_size_below_one(size):
         land_ndjson_lines(None, ['{"$TYPE":"A"}'], datetime(2026, 1, 1), chunk_size=size)
     with pytest.raises(ValueError, match="chunk size"):
         _land(None, datetime(2026, 1, 1), size)
+
+
+@pytest.mark.parametrize("value,expected", [
+    ("1", True), ("TRUE", True), ("Yes", True), (" on ", True),
+    ("0", False), ("False", False), ("NO", False), ("off", False), ("", False),
+])
+def test_boolean_knobs_accept_both_spellings(monkeypatch, tmp_path, value, expected):
+    from execute_sync_spark.config import resolve_config
+
+    monkeypatch.setenv("EXECUTESYNC_FORCE", value)
+    monkeypatch.setenv("EXECUTESYNC_INCLUDE_CALCS", value)
+    cfg = resolve_config(env_file=str(tmp_path / "absent.env"))
+    assert (cfg.force, cfg.include_calcs) == (expected, expected)
+
+
+@pytest.mark.parametrize("name,value", [
+    ("EXECUTESYNC_FORCE", "ture"),
+    ("EXECUTESYNC_INCLUDE_CALCS", "maybe"),
+    ("EXECUTESYNC_HIDE_INACTIVE_FIELDS", "2"),
+])
+def test_boolean_knobs_reject_other_values(monkeypatch, tmp_path, name, value):
+    """Anything else used to mean False without a word."""
+    from execute_sync_spark.config import resolve_config
+
+    monkeypatch.setenv(name, value)
+    with pytest.raises(ValueError, match=name):
+        resolve_config(env_file=str(tmp_path / "absent.env"))
+
+
+@pytest.mark.parametrize("value", ["bogus", "verbose", "trace", "10"])
+def test_log_level_rejects_unknown_names(monkeypatch, tmp_path, value):
+    from execute_sync_spark.config import resolve_config
+
+    monkeypatch.setenv("EXECUTESYNC_LOG_LEVEL", value)
+    with pytest.raises(ValueError, match="EXECUTESYNC_LOG_LEVEL"):
+        resolve_config(env_file=str(tmp_path / "absent.env"))
+
+
+@pytest.mark.parametrize("value,level", [
+    ("debug", logging.DEBUG), ("INFO", logging.INFO), ("Warn", logging.WARNING),
+    ("warning", logging.WARNING), ("error", logging.ERROR), ("CRITICAL", logging.CRITICAL),
+])
+def test_cli_applies_log_level(monkeypatch, tmp_path, value, level):
+    """The level reaches the package logger, so the per-page sync records
+    (INFO) are emitted; ``config`` starts no Spark session."""
+    from execute_sync_spark import cli
+
+    logger = logging.getLogger("execute_sync_spark")
+    before = logger.level
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setenv("EXECUTESYNC_LOG_LEVEL", value)
+    try:
+        assert cli.main(["config"]) == 0
+        assert logger.level == level
+        assert logging.getLogger("execute_sync_spark.sources.sync").getEffectiveLevel() == level
+    finally:
+        logger.setLevel(before)

@@ -1,7 +1,4 @@
-"""k-means IVF quantizer: convergence and assignment-quality checks, plus
-the case-normalization landing option."""
-
-import json
+"""k-means IVF quantizer: convergence and assignment-quality checks."""
 
 from pyspark.sql import functions as F
 
@@ -38,33 +35,3 @@ def test_kmeans_improves_over_naive_centroids(spark):
     b = sorted(tuple(r.embedding) for r in again.collect())
     assert a == b
 
-
-def test_uppercase_keys_landing_option(spark):
-    from datetime import datetime, timezone
-
-    from execute_sync_spark.landing import land_ndjson_lines
-    from execute_sync_spark.operators import create_views, latest
-    from execute_sync_spark.schema import parse_root_schema
-
-    root = parse_root_schema({"T": {
-        "NAME": {"NAME": "NAME", "ACTIVE": True, "TYPE": "TEXT", "NULLABLE": True},
-        "KIDS": {"NAME": "KIDS", "ACTIVE": True, "TYPE": "RECORD LIST", "NULLABLE": True,
-                 "RECORD_TYPE": {"Q": {"NAME": "Q", "ACTIVE": True, "TYPE": "INTEGER", "NULLABLE": True}}},
-    }})
-    doc = {"$TYPE": "T", "DOCUMENT_ID": "x", "$VERSION": 1, "$AUTHOR_ID": "u",
-           "$DATE": "2026-01-01T00:00:00Z", "$DELETED": False,
-           "name": "lower-cased feed", "kids": [{"listitem_id": "a", "q": 3}]}
-    bd = datetime(2026, 1, 2, tzinfo=timezone.utc)
-
-    # without normalization the mixed-case keys are invisible to the views
-    plain = create_views(latest(land_ndjson_lines(spark, [json.dumps(doc)], bd)), root, register=False)
-    assert plain["T"].first().NAME is None
-
-    normalized = create_views(
-        latest(land_ndjson_lines(spark, [json.dumps(doc)], bd, uppercase_keys=True)),
-        root, register=False,
-    )
-    row = normalized["T"].first()
-    assert row.NAME == "lower-cased feed"
-    items = normalized["T_KIDS"].collect()
-    assert [(r.LISTITEM_ID, r.Q) for r in items] == [("a", 3)]

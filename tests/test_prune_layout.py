@@ -65,57 +65,6 @@ def test_prune_rewrites_only_dirty_partitions(spark, tmp_path):
     assert part_files() == after
 
 
-def test_materialized_latest_matches_lazy(spark, tmp_path):
-    from execute_sync_spark.operators import latest
-
-    sink = ParquetSink(spark, str(tmp_path / "wh"))
-    for lines, bd in zip(feed.batch_lines(), feed.BATCH_DATES):
-        sink.append(land_ndjson_lines(spark, lines, bd))
-    sink.materialize_latest()
-    snap = {tuple(r) for r in sink.read_latest().collect()}
-    lazy = {tuple(r) for r in latest(sink.read()).collect()}
-    assert snap == lazy
-    # refresh after another batch keeps them in sync
-    from datetime import timedelta
-
-    sink.append(land_ndjson_lines(spark, feed.batch_lines()[0], feed.BATCH_DATES[2] + timedelta(days=2)))
-    sink.materialize_latest()
-    assert {tuple(r) for r in sink.read_latest().collect()} == {
-        tuple(r) for r in latest(sink.read()).collect()
-    }
-
-
-def test_incremental_refresh_matches_full(spark, tmp_path):
-    """refresh_latest touches only the types in new batches yet yields the
-    same snapshot a full materialize would."""
-    from datetime import timedelta
-
-    from execute_sync_spark.operators import latest
-
-    sink = ParquetSink(spark, str(tmp_path / "wh"))
-    for lines, bd in zip(feed.batch_lines(), feed.BATCH_DATES):
-        sink.append(land_ndjson_lines(spark, lines, bd))
-    assert sink.refresh_latest() == ["*"]  # bootstrap = full materialize
-
-    # no new batches -> no-op
-    assert sink.refresh_latest() == []
-
-    # a VENDOR-only batch refreshes only the VENDOR partition
-    new_vendor = (
-        '{"$TYPE": "VENDOR", "DOCUMENT_ID": "vnd-01", "$VERSION": 2, '
-        '"$AUTHOR_ID": "u-1", "$DATE": "2026-03-06T00:00:00Z", "$DELETED": false, '
-        '"VENDOR_NAME": "Acme Drilling Intl", "RATING": 5}'
-    )
-    sink.append(land_ndjson_lines(spark, [new_vendor], feed.BATCH_DATES[2] + timedelta(days=3)))
-    assert sink.refresh_latest() == ["VENDOR"]
-    snap = {tuple(r) for r in sink.read_latest().collect()}
-    full = {tuple(r) for r in latest(sink.read()).collect()}
-    assert snap == full
-    # the new vendor version is visible
-    v = [r for r in sink.read_latest().collect() if r.id == "vnd-01"]
-    assert len(v) == 1 and v[0].version == 2
-
-
 def test_compact_files_binpacks_partitions(spark, tmp_path):
     """Five small appends leave >= 5 files per type partition; compaction
     bin-packs each partition to the target size (1 file here) with content
@@ -183,31 +132,6 @@ def test_scoped_prune_survives_escaped_partition_values(spark, tmp_path):
     assert kept == {("A:B", "new"), ("PLAIN", "keep")}
 
 
-def test_incremental_refresh_survives_escaped_partition_values(spark, tmp_path):
-    """refresh_latest swaps the snapshot partition of a type Spark escapes in
-    the directory name (':' -> %3A): a newer version of an ``A:B`` document
-    must reach the snapshot, not only the refreshed-types list."""
-    import json
-    from datetime import datetime
-
-    from execute_sync_spark.operators import latest
-
-    def doc(version):
-        return json.dumps({
-            "$TYPE": "A:B", "DOCUMENT_ID": "x", "$VERSION": version, "$AUTHOR_ID": "u-1",
-            "$DATE": "2026-03-01T00:00:00Z", "$DELETED": False,
-        })
-
-    sink = ParquetSink(spark, str(tmp_path / "wh"))
-    sink.append(land_ndjson_lines(spark, [doc(1)], datetime(2026, 3, 1)))
-    assert sink.refresh_latest() == ["*"]
-    sink.append(land_ndjson_lines(spark, [doc(2)], datetime(2026, 3, 2)))
-    assert sink.refresh_latest() == ["A:B"]
-    snap = {(r.type, r.version) for r in sink.read_latest().collect()}
-    assert snap == {(r.type, r.version) for r in latest(sink.read()).collect()}
-    assert snap == {("A:B", 2)}
-
-
 def test_compact_files_keys_escaped_types_by_type_value(spark, tmp_path):
     """compact_files returns {type: files_removed} keyed by the type value,
     not by the directory name Spark escapes it to (':' -> %3A)."""
@@ -220,3 +144,19 @@ def test_compact_files_keys_escaped_types_by_type_value(spark, tmp_path):
     for day in (1, 2, 3):
         sink.append(land_ndjson_lines(spark, [doc], datetime(2026, 3, day)))
     assert sink.compact_files() == {"A:B": 2}
+
+
+def test_prune_keeps_transaction_markers(spark, tmp_path):
+    """prune rewrites only ``type=*`` partitions: a batch appended with a
+    ``txn_id`` stays marked after its partition is rewritten, so a replay
+    of it is still absorbed."""
+    from datetime import timedelta
+
+    sink = ParquetSink(spark, str(tmp_path / "wh"))
+    b = feed.batch_lines()
+    assert sink.append(land_ndjson_lines(spark, b[0], feed.BATCH_DATES[0]), txn_id="page-0") > 0
+    # a superseding copy of the same documents in a later batch
+    sink.append(land_ndjson_lines(spark, b[0], feed.BATCH_DATES[0] + timedelta(days=1)))
+    assert sink.prune() > 0
+    assert sink.txn_applied("page-0")
+    assert sink.append(land_ndjson_lines(spark, b[0], feed.BATCH_DATES[0]), txn_id="page-0") == 0

@@ -52,9 +52,16 @@ def test_duckdb_sink_end_to_end(spark, tmp_path):
     # views compile over the DuckDB-backed landing
     from execute_sync_spark.schema.model import parse_root_schema
 
+    # a D1 view left by another sink in this session must not stand in
+    spark.catalog.dropTempView("EXECUTE_DOCUMENTS_LATEST_ALL_VERSIONS")
     views = sink.create_views(parse_root_schema(FileFeedSource(_feed_dir(tmp_path)).fetch_schema()))
     assert spark.sql("SELECT count(*) AS n FROM TICKET_LINES").first().n == 25
     assert {"AFE", "VENDOR"} <= set(views)
+    # D1 (every version, newest copy of each) over the DuckDB-backed table
+    d1 = spark.sql("SELECT type, id, version FROM EXECUTE_DOCUMENTS_LATEST_ALL_VERSIONS WHERE chunk = 0")
+    assert d1.count() == d1.distinct().count() == con.execute(
+        "SELECT COUNT(DISTINCT (type, id, version)) FROM EXECUTE_DOCUMENTS WHERE chunk = 0"
+    ).fetchone()[0]
 
 
 def test_sqlite_sink_end_to_end(spark, tmp_path):

@@ -1,5 +1,5 @@
-"""``split_document`` without Spark: the per-line compat chunk-split and key
-uppercasing that a sync page runs where it already is, before the upload."""
+"""``split_document`` without Spark: the per-line compat chunk-split that a
+sync page runs where it already is, before the upload."""
 
 import json
 
@@ -31,17 +31,6 @@ def _reference_split(line: str, chunk_size: int) -> list[str]:
     return [line] + [_dumps(c) for c in chunks]
 
 
-def _reference_upper(line: str) -> str:
-    def upper(obj):
-        if isinstance(obj, dict):
-            return {k.upper(): upper(v) for k, v in obj.items()}
-        if isinstance(obj, list):
-            return [upper(v) for v in obj]
-        return obj
-
-    return _dumps(upper(json.loads(line)))
-
-
 def _fixture_docs() -> list[str]:
     lines = [l for page in feed.batch_lines() for l in page]
     many = {"$TYPE": "T", "DOCUMENT_ID": "m-1", "$VERSION": 1, "b": list(range(7)),
@@ -55,14 +44,7 @@ def test_split_matches_the_reference_on_the_fixture_feed(chunk_size):
     for line in _fixture_docs():
         parts = split_document(line, chunk_size)
         assert (parts or [line]) == _reference_split(line, chunk_size), line
-        upper = split_document(line, chunk_size, uppercase_keys=True)
-        assert upper == _reference_split(_reference_upper(line), chunk_size), line
-
-
-def test_uppercase_without_chunking_rewrites_every_document():
-    for line in _fixture_docs():
         assert split_document(line, None) is None
-        assert split_document(line, None, uppercase_keys=True) == [_reference_upper(line)]
 
 
 @pytest.mark.parametrize("chunk_size", [1, 2, 10])
@@ -87,6 +69,5 @@ def test_comma_prefilter_is_exact(monkeypatch, chunk_size):
 def test_non_documents_land_unchanged(line):
     """The split runs before the metadata filter, so it sees every line and
     leaves the ones that are not JSON objects to the parse-skip path."""
-    for uppercase in (False, True):
-        assert split_document(line, 1, uppercase_keys=uppercase) is None
-    assert split_document(line, None, uppercase_keys=True) is None
+    assert split_document(line, 1) is None
+    assert split_document(line, None) is None
