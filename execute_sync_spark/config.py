@@ -73,7 +73,10 @@ def _coerce(name: str, value: str, target_type: type):
             raise ValueError(f"{name} must be empty or one of {'/'.join(_TRUE + _FALSE[1:])}, got {value!r}")
         return word in _TRUE
     if target_type is int:
-        return int(value)
+        try:
+            return int(value)
+        except ValueError:
+            raise ValueError(f"{name} must be an integer, got {value!r}") from None
     return value
 
 

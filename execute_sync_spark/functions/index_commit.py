@@ -1,36 +1,36 @@
-"""Shared commit protocol for partitioned, incrementally-maintained
-indexes (the refactor VERDICT r7 #7 earmarked "once the surface stops
-moving" — it has: r8-r10 added no new protocol variant).
+"""The one recoverable commit protocol for partitioned, incrementally
+maintained tables: batch append, compaction, stranded check and sweep.
 
-Both persisted-ANN index families maintain a parquet tree whose LEAF
-partitions accumulate per-batch sub-partitions and are periodically
-compacted with a recoverable two-rename swap:
+Every client maintains a parquet tree whose LEAF partitions accumulate
+per-batch sub-partitions and are periodically compacted with a
+recoverable two-rename swap. A ``LeafSpec`` names one client's leaves
+(their partition levels and aside-dir prefix); everything else is here:
 
-- IVF / IVF+PQ: leaves are single-level ``cell_id=<c>`` dirs
-  (functions/similarity.py build/append/compact/sweep family);
-- sign-LSH: leaves are two-level ``table=<t>/bucket=<b>`` dirs.
+- ``HourlyRollup`` (operators/rollup.py): ``day=<d>`` leaves, ``ROLLUP_SPEC``;
+- IVF / IVF+PQ (functions/similarity.py): ``cell_id=<c>`` leaves, ``CELL_SPEC``;
+- sign-LSH (functions/similarity.py): ``table=<t>/bucket=<b>`` leaves, ``LSH_SPEC``;
+- pHash (functions/multimodal.py) and BM25 (functions/text.py) indexes.
 
-The protocol is identical — dynamic-partition-overwrite append keyed on a
-replay-stable batch_id, per-leaf ``_absorbed.json`` manifests plus an
-O(1) root summary, two-rename swap with root-level aside dirs, and a
-sweep that forward-finishes from the same run's staging dir or rolls
-back — so it lives HERE once, parameterized by a ``LeafSpec`` that knows
-only the partition levels and the aside-dir naming. ``similarity.py``'s
-cell functions delegate with ``CELL_SPEC`` (byte-identical on-disk
-naming to the pre-refactor code: ``_old_cell_<c>_<pid>`` asides,
-``<path>_compact_<pid>`` staging), and the LSH family uses ``LSH_SPEC``.
+The protocol: a dynamic-partition-overwrite append keyed on a
+replay-stable batch_id; per-leaf ``_absorbed.json`` manifests plus an
+O(1) root summary; a two-rename swap through root-level asides
+(``<aside_prefix><leaf key>_<pid>``) from a ``<path>_compact_<pid>``
+staging dir; and a sweep that forward-finishes from the same run's
+staging dir, rolls back, or merges by coverage. One partition write per
+batch, replay overwrites itself, compaction is O(dirty leaves) — which
+keeps a streaming feed into a many-thousand-leaf table cheap at 100 TB.
 
 All commit metadata goes through ``storage.STORE`` (see storage.py for
 the rename/listdir/freshness contract); bulk parquet goes through Spark.
-The design mirrors ``operators/rollup.py`` (HourlyRollup) — one
-partition write per batch, replay overwrites itself, compaction is
-O(dirty leaves) — which is what keeps a streaming feed into a
-many-thousand-leaf index cheap at 100 TB.
+``compact`` and ``sweep`` report what they changed as one INFO record on
+this module's logger (its ``index_commit`` attribute holds the fields),
+built from what they already listed, so it costs no Spark job.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 from dataclasses import dataclass
@@ -40,11 +40,14 @@ from pyspark.sql import functions as F
 from execute_sync_spark import storage
 
 MANIFEST = "_absorbed.json"
+COMPACTED = "batch_id=__compacted__"
+
+log = logging.getLogger(__name__)
 
 
 @dataclass(frozen=True)
 class LeafSpec:
-    """Naming of one index family's leaf partitions.
+    """Naming of one client's leaf partitions.
 
     ``levels``: partition column names above batch_id, outer first.
     ``aside_prefix``: root-level aside dir prefix for the two-rename swap.
@@ -82,6 +85,7 @@ class LeafSpec:
         return key, pid
 
 
+ROLLUP_SPEC = LeafSpec(levels=("day",), aside_prefix="_old_day_", sweep_hint="sweep()")
 CELL_SPEC = LeafSpec(levels=("cell_id",), aside_prefix="_old_cell_", sweep_hint="sweep_index()")
 LSH_SPEC = LeafSpec(levels=("table", "bucket"), aside_prefix="_old_tb_", sweep_hint="sweep_lsh_index()")
 PHASH_SPEC = LeafSpec(
@@ -94,8 +98,7 @@ BM25_SPEC = LeafSpec(
 
 def _iter_leaves(fs, path: str, spec: LeafSpec) -> list[tuple[str, ...]]:
     """All live leaf value-tuples under ``path`` (walks the level dirs;
-    O(leaves) listings — the same cost the pre-refactor per-cell walk
-    paid, and only metadata, never data)."""
+    O(leaves) listings, only metadata, never data)."""
     frontier: list[tuple[tuple[str, ...], str]] = [((), path)]
     for level in spec.levels:
         nxt = []
@@ -109,36 +112,52 @@ def _iter_leaves(fs, path: str, spec: LeafSpec) -> list[tuple[str, ...]]:
     return [values for values, _ in frontier]
 
 
+def _listed(fs, manifest: str) -> set[str] | None:
+    """The batch ids a manifest lists; None when it is missing or unreadable."""
+    try:
+        return set(json.loads(fs.read_text(manifest)).get("batches", []))
+    except (OSError, ValueError):
+        return None
+
+
+def _batch_ids(names) -> set[str]:
+    """The uncompacted batch ids among a leaf dir's entries."""
+    return {
+        n[len("batch_id="):] for n in names if n.startswith("batch_id=") and n != COMPACTED
+    }
+
+
+def _leaf_union(fs, path: str, spec: LeafSpec) -> set[str]:
+    """Union of every live leaf's manifest (the per-leaf walk)."""
+    out: set[str] = set()
+    for values in _iter_leaves(fs, path, spec):
+        p = os.path.join(path, spec.rel(values), MANIFEST)
+        if fs.isfile(p):
+            out |= _listed(fs, p) or set()
+    return out
+
+
 def absorbed(path: str, spec: LeafSpec) -> set[str]:
     """Batch ids already folded into compacted leaf partitions anywhere in
-    the index. O(1) fast path via the root summary manifest ``compact``
+    the table. O(1) fast path via the root summary manifest ``compact``
     writes LAST (and deletes FIRST — its presence implies completeness);
     fallback is the per-leaf walk, which is what keeps the per-append
     replay guard safe after a mid-compact crash."""
     fs = storage.STORE
-    out: set[str] = set()
     if not fs.isdir(path):
-        return out
+        return set()
     root = os.path.join(path, MANIFEST)
     if fs.isfile(root):
-        try:
-            return set(json.loads(fs.read_text(root)).get("batches", []))
-        except (OSError, ValueError):
-            pass  # unreadable summary -> the per-leaf walk below
-    for values in _iter_leaves(fs, path, spec):
-        p = os.path.join(path, spec.rel(values), MANIFEST)
-        if fs.isfile(p):
-            try:
-                out |= set(json.loads(fs.read_text(p)).get("batches", []))
-            except (OSError, ValueError):
-                continue
-    return out
+        listed = _listed(fs, root)
+        if listed is not None:
+            return listed
+    return _leaf_union(fs, path, spec)  # no or unreadable summary
 
 
 def check_layout(path: str, spec: LeafSpec) -> None:
     """Refuse to append into a LEGACY layout whose leaves hold data files
     directly (no ``batch_id=`` sub-partitions): mixing the two layouts in
-    one tree makes Spark's partition discovery reject the whole index on
+    one tree makes Spark's partition discovery reject the whole table on
     the NEXT read, long after the append succeeded — fail loudly at
     append time instead (ADVICE r7, generalized). Scans ALL leaves so an
     already-mixed tree can't pass on listing order (ADVICE r8)."""
@@ -162,7 +181,7 @@ def check_layout(path: str, spec: LeafSpec) -> None:
 
 def stranded(path: str, spec: LeafSpec) -> list[str]:
     """Aside dirs whose live leaf is missing — a crash inside compact's
-    two-rename window. Probing around such a leaf silently returns wrong
+    two-rename window. Reading around such a leaf silently returns wrong
     results and its manifest is unreachable, so read/append paths must
     fail loudly on these (callers use :func:`check_not_stranded`)."""
     fs = storage.STORE
@@ -184,9 +203,9 @@ def check_not_stranded(path: str, spec: LeafSpec) -> None:
     s = stranded(path, spec)
     if s:
         raise RuntimeError(
-            f"index at {path} has leaves stranded by an interrupted "
+            f"{path} has leaves stranded by an interrupted "
             f"compaction ({s[:3]}{'...' if len(s) > 3 else ''}); run "
-            f"{spec.sweep_hint} to restore or reclaim them before probing "
+            f"{spec.sweep_hint} to restore or reclaim them before reading "
             "or appending"
         )
 
@@ -200,10 +219,17 @@ def append(
     """Land one batch's pre-assigned rows (``df`` must already carry the
     spec's level columns) under (``*levels``, batch_id) partitions with
     DYNAMIC partition overwrite: a replay of the same batch_id overwrites
-    its own partitions instead of duplicating rows — the
-    ``HourlyRollup.refresh`` idempotency idiom, which is why batch_id is
-    REQUIRED (a foreachBatch epoch id is exactly right). Returns the leaf
-    value-tuples the batch touched (empty when skipped as absorbed)."""
+    its own partitions instead of duplicating rows, which is why batch_id
+    is REQUIRED (a foreachBatch epoch id is exactly right).
+
+    A replay after a compaction skips exactly the touched leaves that
+    already hold the batch — listed in their own manifest, or still as
+    their ``batch_id=`` dir — and writes the rest: a dynamic-overwrite
+    commit that died partway through its partition moves left some leaves
+    without the batch, and a compact before the replay must not make them
+    unreachable. The root summary answers "absorbed nowhere" in O(1), so a
+    first delivery reads no leaf manifest. Returns the leaf value-tuples
+    written (empty when there was nothing left to write)."""
     if batch_id is None:
         raise ValueError(
             "append requires a replay-stable batch_id (e.g. the "
@@ -212,20 +238,22 @@ def append(
         )
     check_not_stranded(path, spec)
     check_layout(path, spec)
-    if str(batch_id) in absorbed(path, spec):
-        # compact-then-replay: already folded into compacted partitions
-        return []
-    rows = df.withColumn("batch_id", F.lit(str(batch_id)))
+    bid = str(batch_id)
+    replay = bid in absorbed(path, spec)
+    rows = df.withColumn("batch_id", F.lit(bid))
     rows.persist()
     try:
         touched = sorted(
             tuple(str(r[l]) for l in spec.levels)
             for r in rows.select(*spec.levels).distinct().collect()
         )
+        if replay:
+            touched = [v for v in touched if not _holds(os.path.join(path, spec.rel(v)), bid)]
         if not touched:
             return []
         (
-            rows.write.mode("overwrite")
+            (rows.filter(_leaf_filter(spec, touched)) if replay else rows)
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*spec.levels, "batch_id")
             .parquet(path)
@@ -235,11 +263,20 @@ def append(
     return touched
 
 
+def _holds(leaf: str, bid: str) -> bool:
+    """Whether a leaf already holds batch ``bid``: folded into its
+    compacted partition, or as its own committed partition dir."""
+    fs = storage.STORE
+    return bid in (_listed(fs, os.path.join(leaf, MANIFEST)) or ()) or fs.isdir(
+        os.path.join(leaf, f"batch_id={bid}")
+    )
+
+
 def _leaf_filter(spec: LeafSpec, leaves: list[tuple[str, ...]]):
     """Partition-prunable predicate selecting exactly these leaves: an OR
     of per-leaf conjunctions of ``level = literal`` (each term is a plain
     equality on a partition column, so the scan prunes to the dirty
-    leaves — never a full-index read)."""
+    leaves — never a full-table read)."""
     cond = None
     for values in leaves:
         leaf = None
@@ -250,30 +287,31 @@ def _leaf_filter(spec: LeafSpec, leaves: list[tuple[str, ...]]):
     return cond
 
 
-def compact(spark, path: str, spec: LeafSpec) -> list[tuple[str, ...]]:
+def compact(spark, path: str, spec: LeafSpec, fold=lambda rows: rows) -> list[tuple[str, ...]]:
     """Collapse each dirty leaf's batch partitions into a single
     ``batch_id=__compacted__`` partition — bounds small-file growth on a
-    live (streaming-maintained) index; O(dirty leaves), not O(index).
-    Each swapped leaf carries an ``_absorbed.json`` manifest of every
-    batch id folded in, so replays of absorbed batches are skipped by
-    :func:`append`; the per-leaf commit is the recoverable two-rename
+    live table; O(dirty leaves), not O(table). ``fold`` maps the dirty
+    leaves' merged rows (batch_id dropped) to what the compacted
+    partition holds: the identity for an index, the sum of partials for
+    a rollup. Each swapped leaf carries an ``_absorbed.json`` manifest of
+    every batch id folded in, so replays of absorbed batches are skipped
+    by :func:`append`; the per-leaf commit is the recoverable two-rename
     swap (crash inside the window strands the leaf in a ``_``-prefixed
     root aside the reader ignores — :func:`sweep` restores or reclaims).
-    Returns the compacted leaf value-tuples."""
+    Returns the compacted leaf value-tuples, sorted."""
     fs = storage.STORE
     if not fs.isdir(path):
         return []
-    check_not_stranded(path, spec)
-    dirty: list[tuple[str, ...]] = []
-    for values in _iter_leaves(fs, path, spec):
-        p = os.path.join(path, spec.rel(values))
-        if any(
-            b.startswith("batch_id=") and b != "batch_id=__compacted__"
-            for b in fs.listdir(p)
-        ):
-            dirty.append(values)
+    # the dirty scan is the first listing: a leaf a lagging listing hides
+    # is compacted next round, and a compact that writes nothing needs no
+    # stranded check
+    dirty = sorted(
+        values for values in _iter_leaves(fs, path, spec)
+        if _batch_ids(fs.listdir(os.path.join(path, spec.rel(values))))
+    )
     if not dirty:
         return []
+    check_not_stranded(path, spec)
     # the root summary manifest is about to go stale: remove it FIRST so a
     # crash mid-compact degrades absorbed() to the (correct) per-leaf walk
     # instead of serving a stale O(1) answer that lets replays through
@@ -282,12 +320,11 @@ def compact(spark, path: str, spec: LeafSpec) -> list[tuple[str, ...]]:
         fs.remove(root_manifest)
     except OSError:
         pass
-    merged = (
+    merged = fold(
         spark.read.parquet(path)
         .filter(_leaf_filter(spec, dirty))  # partition-pruned read
         .drop("batch_id")
-        .withColumn("batch_id", F.lit("__compacted__"))
-    )
+    ).withColumn("batch_id", F.lit("__compacted__"))
     tmp = f"{path}_compact_{os.getpid()}"
     merged.write.mode("overwrite").option(
         "partitionOverwriteMode", "static"
@@ -295,16 +332,9 @@ def compact(spark, path: str, spec: LeafSpec) -> list[tuple[str, ...]]:
     for values in dirty:
         rel = spec.rel(values)
         live = os.path.join(path, rel)
-        batches = {
-            b[len("batch_id="):]
-            for b in fs.listdir(live)
-            if b.startswith("batch_id=") and b != "batch_id=__compacted__"
-        }
-        mpath = os.path.join(live, MANIFEST)
-        try:
-            batches |= set(json.loads(fs.read_text(mpath)).get("batches", []))
-        except (OSError, ValueError):
-            pass
+        batches = _batch_ids(fs.listdir(live)) | (
+            _listed(fs, os.path.join(live, MANIFEST)) or set()
+        )
         src = os.path.join(tmp, rel)
         fs.write_text(
             os.path.join(src, MANIFEST), json.dumps({"batches": sorted(batches)})
@@ -322,58 +352,58 @@ def compact(spark, path: str, spec: LeafSpec) -> list[tuple[str, ...]]:
     fs.rmtree(tmp)
     # root summary manifest LAST (union over every leaf) — the O(1) answer
     # for the per-append replay guard; its presence implies completeness
-    union: set[str] = set()
-    for values in _iter_leaves(fs, path, spec):
-        p = os.path.join(path, spec.rel(values), MANIFEST)
-        if fs.isfile(p):
-            try:
-                union |= set(json.loads(fs.read_text(p)).get("batches", []))
-            except (OSError, ValueError):
-                continue
-    fs.write_text(root_manifest, json.dumps({"batches": sorted(union)}))
+    fs.write_text(
+        root_manifest, json.dumps({"batches": sorted(_leaf_union(fs, path, spec))})
+    )
+    record = {
+        "event": "compact", "aside_prefix": spec.aside_prefix, "path": path,
+        "compacted": [spec.key(v) for v in dirty],
+    }
+    log.info(
+        "compact %(path)s (%(aside_prefix)s): compacted %(compacted)s",
+        record, extra={"index_commit": record},
+    )
     return dirty
+
+
+def old_enough(p: str, min_age_s: float, now: float) -> bool:
+    """The multi-process sweep guard: True when ``p`` is older than
+    ``min_age_s`` by the store's freshness clock. An unguarded sweep
+    (``min_age_s <= 0``) processes every dir and never stats; on a
+    guarded sweep a stat failure skips the dir this round rather than
+    reclaim a possibly-fresh dir of a live commit (ADVICE r8/r9)."""
+    if min_age_s <= 0:
+        return True
+    try:
+        return now - storage.STORE.freshness(p) >= min_age_s
+    except OSError:
+        return False
 
 
 def sweep(path: str, spec: LeafSpec, min_age_s: float = 0.0) -> dict[str, list[str]]:
     """Restore or reclaim dirs stranded by a crash inside :func:`compact`'s
-    two-rename window (the HourlyRollup.sweep rules): a leaf whose live
-    dir vanished is forward-finished ONLY from the SAME compact run's
-    staging dir (pid in the aside name matches the
-    ``{path}_compact_<pid>`` suffix) and only if that staged leaf already
-    carries its manifest — any other staging dir is a stale snapshot from
-    an earlier crashed run and restoring it would silently drop appended
-    batches; otherwise the aside rolls back. When the LIVE dir reappeared
-    inside the window (a concurrent writer), the aside is reclaimed only
-    to the extent live's batch dirs + manifest COVER it — uncovered
-    batches merge back in, so a concurrent APPENDER's recreated leaf
-    (round-13 fault axis) never costs the pre-compact batches. Leftover
-    asides and staging tmps are reclaimed.
+    two-rename window: a leaf whose live dir vanished is forward-finished
+    ONLY from the SAME compact run's staging dir (pid in the aside name
+    matches the ``{path}_compact_<pid>`` suffix) and only if that staged
+    leaf already carries its manifest — any other staging dir is a stale
+    snapshot from an earlier crashed run and restoring it would silently
+    drop appended batches; otherwise the aside rolls back. When the LIVE
+    dir reappeared inside the window (a concurrent writer), the aside is
+    reclaimed only to the extent live's batch dirs + manifest COVER it —
+    uncovered batches merge back in, so a concurrent APPENDER's recreated
+    leaf (round-13 fault axis) never costs the pre-compact batches.
+    Leftover asides and staging tmps are reclaimed.
 
     ``min_age_s`` guards a MULTI-PROCESS deployment: another process
     mid-compact has FRESH asides and a fresh staging dir — sweep only
-    touches dirs older than this (freshness = the store's
-    max(mtime, ctime) clock; a stat failure SKIPS the dir on a guarded
-    sweep, ADVICE r9). Set it above a compact's expected duration when
-    sweeping a shared index."""
+    touches dirs older than this (see :func:`old_enough`). Set it above a
+    compact's expected duration when sweeping a shared table."""
     fs = storage.STORE
     restored: list[str] = []
     reclaimed: list[str] = []
     if not fs.isdir(path):
         return {"restored": restored, "reclaimed": reclaimed}
     now = time.time()
-
-    def _old_enough(p: str) -> bool:
-        # the default (min_age_s=0) sweep must process every dir
-        # unconditionally and never stats (ADVICE r8)
-        if min_age_s <= 0:
-            return True
-        try:
-            fresh = fs.freshness(p)
-        except OSError:
-            # guarded sweep + stat failure: skip this round rather than
-            # reclaim a possibly-fresh dir of a live compact (ADVICE r9)
-            return False
-        return now - fresh >= min_age_s
 
     # evaluate staging-dir eligibility BEFORE the aside loop: a
     # forward-finish rename out of a staging dir bumps its mtime past
@@ -385,7 +415,7 @@ def sweep(path: str, spec: LeafSpec, min_age_s: float = 0.0) -> dict[str, list[s
         for n in sorted(fs.listdir(parent))
         if n.startswith(base + "_compact_")
         and fs.isdir(os.path.join(parent, n))
-        and _old_enough(os.path.join(parent, n))
+        and old_enough(os.path.join(parent, n), min_age_s, now)
     ]
 
     for n in sorted(fs.listdir(path)):
@@ -396,98 +426,13 @@ def sweep(path: str, spec: LeafSpec, min_age_s: float = 0.0) -> dict[str, list[s
         # no isdir() pre-check here: at min_age_s=0 the sweep must touch
         # every aside WITHOUT a stat (ADVICE r8 — isdir swallows a
         # transient stat failure into a silent skip)
-        if not _old_enough(aside):
+        if not old_enough(aside, min_age_s, now):
             continue
         key, pid = parsed
         rel = spec.rel(spec.key_to_values(key))
         live = os.path.join(path, rel)
         if fs.isdir(live):
-            # a live dir reappearing inside the swap window has TWO
-            # explanations, and they demand opposite recoveries: a winning
-            # concurrent COMPACTOR (live is complete — its manifest covers
-            # every batch the aside holds; reclaim the aside as debris) or
-            # a concurrent APPENDER (live holds ONLY the new batch; blind
-            # reclaim would silently drop every pre-compact batch). Decide
-            # by COVERAGE, not existence: reclaim only what live provably
-            # covers (raw batch_id dirs + its manifest ledger) and move
-            # the uncovered remainder back in — batch dirs are disjoint by
-            # name, so the merges are collision-free renames.
-            live_names = set(fs.listdir(live))
-            covered = {
-                b[len("batch_id="):]
-                for b in live_names
-                if b.startswith("batch_id=") and b != "batch_id=__compacted__"
-            }
-            try:
-                covered |= set(
-                    json.loads(fs.read_text(os.path.join(live, MANIFEST))).get(
-                        "batches", []
-                    )
-                )
-            except (OSError, ValueError):
-                pass
-            moved = False
-            moved_folded: set = set()
-            for b in sorted(fs.listdir(aside)):
-                if not b.startswith("batch_id="):
-                    continue
-                bid = b[len("batch_id="):]
-                if bid == "__compacted__":
-                    try:
-                        folded = set(
-                            json.loads(
-                                fs.read_text(os.path.join(aside, MANIFEST))
-                            ).get("batches", [])
-                        )
-                    except (OSError, ValueError):
-                        folded = set()
-                    if folded and folded <= covered:
-                        continue  # live's ledger covers it: safe debris
-                    if "batch_id=__compacted__" in live_names:
-                        # both sides compacted yet live does not cover the
-                        # aside — only reachable with a damaged manifest;
-                        # surface it instead of guessing which copy wins
-                        raise RuntimeError(
-                            f"sweep: leaf {rel} has compacted data in both "
-                            f"the live dir and aside {n} and the live "
-                            "manifest does not cover the aside — manual "
-                            "reconciliation required"
-                        )
-                    fs.rename(os.path.join(aside, b), os.path.join(live, b))
-                    moved = True
-                    moved_folded = folded
-                elif bid not in covered:
-                    fs.rename(os.path.join(aside, b), os.path.join(live, b))
-                    moved = True
-            if moved:
-                # carry the replay ledger with the data it describes: a
-                # moved __compacted__ dir's manifest lists the batches
-                # folded into it — without it a later replayed append of
-                # one of those batch_ids would not be absorbed and would
-                # duplicate its rows (ADVICE r13)
-                live_manifest = os.path.join(live, MANIFEST)
-                if not fs.isfile(live_manifest):
-                    try:
-                        fs.rename(
-                            os.path.join(aside, MANIFEST), live_manifest
-                        )
-                    except OSError:
-                        pass
-                elif moved_folded:
-                    # live already has a manifest (the appender path never
-                    # writes one, so this is a live COMPACTED leaf state):
-                    # MERGE the aside's folded-batches ledger instead of
-                    # discarding it with the aside
-                    try:
-                        live_m = json.loads(fs.read_text(live_manifest))
-                    except (OSError, ValueError):
-                        live_m = {}
-                    live_m["batches"] = sorted(
-                        set(live_m.get("batches", [])) | moved_folded
-                    )
-                    fs.write_text(live_manifest, json.dumps(live_m))
-            fs.rmtree(aside)
-            (restored if moved else reclaimed).append(n)
+            (restored if _merge_uncovered(fs, aside, live, rel) else reclaimed).append(n)
             continue
         staged = os.path.join(f"{path}_compact_{pid}", rel)
         if fs.isdir(staged) and fs.isfile(os.path.join(staged, MANIFEST)):
@@ -501,4 +446,75 @@ def sweep(path: str, spec: LeafSpec, min_age_s: float = 0.0) -> dict[str, list[s
         if fs.isdir(p):
             fs.rmtree(p)
             reclaimed.append(n)
+    if restored or reclaimed:
+        record = {
+            "event": "sweep", "aside_prefix": spec.aside_prefix, "path": path,
+            "restored": restored, "reclaimed": reclaimed,
+        }
+        log.info(
+            "sweep %(path)s (%(aside_prefix)s): restored %(restored)s, reclaimed %(reclaimed)s",
+            record, extra={"index_commit": record},
+        )
     return {"restored": restored, "reclaimed": reclaimed}
+
+
+def _merge_uncovered(fs, aside: str, live: str, rel: str) -> bool:
+    """Resolve an aside whose live leaf reappeared inside the swap window,
+    then remove the aside; True when anything moved back into live.
+
+    A reappeared live dir has TWO explanations, and they demand opposite
+    recoveries: a winning concurrent COMPACTOR (live is complete — its
+    manifest covers every batch the aside holds; the aside is debris) or
+    a concurrent APPENDER (live holds ONLY the new batch; blind reclaim
+    would silently drop every pre-compact batch). Decide by COVERAGE, not
+    existence: reclaim only what live provably covers (raw batch_id dirs
+    + its manifest ledger) and move the uncovered remainder back in —
+    batch dirs are disjoint by name, so the merges are collision-free
+    renames."""
+    live_names = set(fs.listdir(live))
+    live_manifest = os.path.join(live, MANIFEST)
+    ledger = _listed(fs, live_manifest) or set()
+    covered = _batch_ids(live_names) | ledger
+    moved = False
+    moved_folded: set[str] = set()
+    for b in sorted(fs.listdir(aside)):
+        if not b.startswith("batch_id="):
+            continue
+        if b == COMPACTED:
+            folded = _listed(fs, os.path.join(aside, MANIFEST)) or set()
+            if folded and folded <= covered:
+                continue  # live's ledger covers it: safe debris
+            if COMPACTED in live_names:
+                # both sides compacted yet live does not cover the aside —
+                # only reachable with a damaged manifest; surface it
+                # instead of guessing which copy wins
+                raise RuntimeError(
+                    f"sweep: leaf {rel} has compacted data in both the live "
+                    f"dir and aside {os.path.basename(aside)} and the live "
+                    "manifest does not cover the aside — manual "
+                    "reconciliation required"
+                )
+            moved_folded = folded
+        elif b[len("batch_id="):] in covered:
+            continue
+        fs.rename(os.path.join(aside, b), os.path.join(live, b))
+        moved = True
+    if moved:
+        # carry the replay ledger with the data it describes: a moved
+        # __compacted__ dir's manifest lists the batches folded into it —
+        # without it a later replayed append of one of those batch_ids
+        # would not be absorbed and would duplicate its rows (ADVICE r13)
+        if not fs.isfile(live_manifest):
+            try:
+                fs.rename(os.path.join(aside, MANIFEST), live_manifest)
+            except OSError:
+                pass
+        elif moved_folded:
+            # live already has a manifest (the appender path never writes
+            # one, so this is a live COMPACTED leaf state): MERGE the
+            # aside's folded-batches ledger instead of discarding it
+            fs.write_text(
+                live_manifest, json.dumps({"batches": sorted(ledger | moved_folded)})
+            )
+    fs.rmtree(aside)
+    return moved

@@ -791,49 +791,17 @@ def build_cell_index(
     return path
 
 
-_INDEX_MANIFEST = "_absorbed.json"
-
-
-def _index_absorbed(path: str) -> set[str]:
-    """Batch ids already folded into compacted cell partitions anywhere in
-    the index (cell assignment is a pure function of (vector, centroids),
-    so a batch id found in ANY manifest means that whole batch was fully
-    written before compaction — a replay of it must be skipped entirely).
-    Delegates to the shared commit protocol (functions/index_commit.py,
-    CELL_SPEC): O(1) root-summary fast path, per-cell walk fallback."""
-    return index_commit.absorbed(path, index_commit.CELL_SPEC)
-
-
-def _index_check_layout(path: str) -> None:
-    """Refuse to append into a LEGACY single-level index layout (ADVICE
-    r7/r8; see index_commit.check_layout for the full reasoning — mixing
-    flat cell_id= data files with two-level cell_id=/batch_id= partitions
-    makes Spark partition discovery reject the whole index on read)."""
-    index_commit.check_layout(path, index_commit.CELL_SPEC)
-
-
-def _index_stranded(path: str) -> list[str]:
-    """``_old_cell_*`` aside dirs whose live ``cell_id=`` counterpart is
-    missing — a crash inside compact_index's two-rename window (probing
-    around such a cell silently returns WRONG top-k, so read/append
-    paths fail loudly; mirrors HourlyRollup._check_not_stranded)."""
-    return index_commit.stranded(path, index_commit.CELL_SPEC)
-
-
-def _index_check_not_stranded(path: str) -> None:
-    index_commit.check_not_stranded(path, index_commit.CELL_SPEC)
-
-
 def sweep_index(path: str, min_age_s: float = 0.0) -> dict[str, list[str]]:
     """Restore or reclaim dirs stranded by a crash inside
     ``compact_index``'s two-rename window — the shared protocol's sweep
-    (index_commit.sweep, CELL_SPEC) with the HourlyRollup.sweep rules:
-    forward-finish ONLY from the SAME compact run's pid-matched staging
-    dir carrying its manifest, else roll the aside back; reclaim leftover
-    asides/tmps. ``min_age_s`` guards a MULTI-PROCESS deployment (another
-    process mid-compact has FRESH asides — only dirs older than this are
-    touched; freshness is the store's max(mtime, ctime) clock, and a stat
-    failure SKIPS the dir on a guarded sweep, ADVICE r8/r9)."""
+    (index_commit.sweep, CELL_SPEC): forward-finish ONLY from the SAME
+    compact run's pid-matched staging dir carrying its manifest, else
+    roll the aside back; merge an aside whose live cell reappeared by
+    coverage; reclaim leftover asides/tmps. ``min_age_s`` guards a
+    MULTI-PROCESS deployment (another process mid-compact has FRESH
+    asides — only dirs older than this are touched; freshness is the
+    store's max(mtime, ctime) clock, and a stat failure SKIPS the dir on
+    a guarded sweep, ADVICE r8/r9)."""
     return index_commit.sweep(path, index_commit.CELL_SPEC, min_age_s)
 
 
@@ -844,7 +812,7 @@ def compact_index(spark, path: str) -> list[int]:
     per-cell ``_absorbed.json`` manifests + root summary keep replays of
     absorbed batches duplicate-free; each cell commits via the
     recoverable two-rename swap. The protocol lives in
-    functions/index_commit.py (shared with the sign-LSH index); this
+    functions/index_commit.py (shared with the rollup and every index); this
     wrapper keeps the historical cell API (int cell ids). Works on both
     index kinds (IVF vectors and IVF+PQ codes — the rewrite is
     schema-agnostic). Returns the compacted cell ids."""
@@ -871,7 +839,8 @@ def append_cell_index(
     At 100 TB a streaming embedding feed keeps the ANN index fresh at the
     cost of one small partition write per batch; compaction, when partial
     files accumulate, is a per-cell rewrite (``compact_index``). Returns
-    the cell ids the batch touched."""
+    the cell ids written (a replay after a compact writes only the cells
+    that do not hold the batch yet)."""
     cells = assign_cells_vectorized(new_batch, centroids, id_col, vec_col)
     touched = index_commit.append(cells, path, index_commit.CELL_SPEC, batch_id)
     return [int(v[0]) for v in touched]
@@ -953,7 +922,7 @@ def ivf_topk_indexed(
                     )
 
     probed = sorted({int(c) for c in probe_cells.ravel()})
-    _index_check_not_stranded(index_path)
+    index_commit.check_not_stranded(index_path, index_commit.CELL_SPEC)
     scan = spark.read.parquet(index_path).filter(F.col("cell_id").isin(probed))
     local = scan.select(id_col, F.col("cell_id").cast("long").alias("cell_id"), "v").mapInPandas(
         topk_per_batch, schema=out_schema
@@ -1226,8 +1195,8 @@ def append_lsh_index(
     land it under (table, bucket, batch_id) partitions with DYNAMIC
     partition overwrite via the shared commit protocol
     (functions/index_commit.py, LSH_SPEC). A replay of the same batch_id
-    overwrites its own partitions; a batch already folded in by
-    ``compact_lsh_index`` is skipped via the manifests. batch_id is
+    overwrites its own partitions; a leaf whose manifest shows the batch
+    already folded in by ``compact_lsh_index`` is skipped. batch_id is
     REQUIRED (a foreachBatch epoch id is exactly right). Probes are
     unchanged: partition pruning on (table, bucket) transparently reads
     the union of batches. Returns the (table, bucket) leaves touched."""
@@ -1745,40 +1714,17 @@ def append_pq_index(
     new batch (with the codebook persisted in the index — new vectors are
     coded against the SAME codebook the queries' ADC tables use, so a
     session can't mix codebooks) and land it under (cell_id, batch_id)
-    with dynamic partition overwrite — replay-idempotent per batch_id,
-    exactly like ``append_cell_index``. Codebook/centroid DRIFT is the
+    through the shared commit protocol (``index_commit.append``,
+    CELL_SPEC) — replay-idempotent per batch_id, exactly like
+    ``append_cell_index``. Codebook/centroid DRIFT is the
     deployment caveat: after enough distribution shift, retrain + a full
     ``build_pq_index`` rebuild (the IVF-family refresh story). Returns
     the touched cell ids."""
-    if batch_id is None:
-        raise ValueError(
-            "append_pq_index requires a replay-stable batch_id (e.g. the "
-            "foreachBatch epoch id); without one a replayed batch would "
-            "insert duplicate codes"
-        )
-    _index_check_not_stranded(path)
-    _index_check_layout(path)
-    if str(batch_id) in _index_absorbed(path):
-        # compact-then-replay guard — see append_cell_index
-        return []
     codebook = load_pq_codebook(path)
     cells = assign_cells_vectorized(new_batch, centroids, id_col=id_col, vec_col=vec_col)
     codes = pq_encode(cells, codebook, id_col=id_col, vec_col="v", carry_cols=["cell_id"])
-    codes = codes.withColumn("batch_id", F.lit(str(batch_id)))
-    codes.persist()
-    try:
-        touched = sorted(r.cell_id for r in codes.select("cell_id").distinct().collect())
-        if not touched:
-            return []
-        (
-            codes.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell_id", "batch_id")
-            .parquet(path)
-        )
-    finally:
-        codes.unpersist()
-    return touched
+    touched = index_commit.append(codes, path, index_commit.CELL_SPEC, batch_id)
+    return sorted(int(v[0]) for v in touched)
 
 
 def load_pq_codebook(path: str):
@@ -1829,7 +1775,7 @@ def ivfpq_topk_indexed(
         probes[int(qid)] = set(int(c) for c in cids[order[:nprobe]])
     all_probed = sorted(set().union(*probes.values()))
 
-    _index_check_not_stranded(index_path)
+    index_commit.check_not_stranded(index_path, index_commit.CELL_SPEC)
     scan = spark.read.parquet(index_path).filter(F.col("cell_id").isin(all_probed))
     codes = scan.select(id_col, "codes", F.col("cell_id").cast("long").alias("cell_id"))
     return _pq_adc_search(codes, qids, _adc_lut(Q, codebook), k, id_col, probes=probes)

@@ -4,7 +4,8 @@ writer instead of row-at-a-time prepared INSERTs.
 
 Requires the target's JDBC driver on the Spark classpath; not exercisable in
 this environment (no JDBC drivers baked in), so writes raise a clear error
-when the driver is missing rather than failing deep in py4j.
+when the driver is missing rather than failing deep in py4j. The views are
+Spark views over the table read back; prune is the target's own DML.
 """
 
 from __future__ import annotations
@@ -12,6 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from execute_sync_spark.landing.schema import LANDING_COLUMNS
+from execute_sync_spark.schema.model import RootSchema
+from execute_sync_spark.sinks.base import register_views
+from execute_sync_spark.sinks.ddl import DIALECTS
 
 
 class JdbcSink:
@@ -38,3 +42,16 @@ class JdbcSink:
 
     def read(self) -> DataFrame:
         return self.spark.read.jdbc(self.url, self.table, properties=self.properties)
+
+    def create_views(self, root: RootSchema) -> dict[str, DataFrame]:
+        """Register EXECUTE_DOCUMENTS[_LATEST[_ALL_VERSIONS]] + the forest."""
+        return register_views(self.read(), root)
+
+    def prune(self) -> int:
+        """Spark's JDBC writer only inserts, so D3 compaction cannot run here."""
+        raise NotImplementedError(
+            f"JdbcSink cannot prune {self.table}: Spark's JDBC writer runs no DELETE. "
+            "Run the target's anti-join DELETE with its own client; "
+            "execute_sync_spark.sinks.ddl.DIALECTS[dialect]['prune']() generates it "
+            f"for {', '.join(sorted(DIALECTS))}"
+        )

@@ -1,9 +1,9 @@
 """Commit-protocol storage interface (VERDICT r8 task 9).
 
-The recoverable-commit protocols in this repo — ``operators/rollup.py``
-(HourlyRollup refresh/compact/sweep) and the persisted-ANN index
-maintenance in ``functions/similarity.py`` (append/compact/sweep) — do two
-kinds of I/O:
+The recoverable-commit protocol in this repo — ``functions/index_commit.py``
+(append/compact/sweep), run by ``operators/rollup.py``'s HourlyRollup and
+by every persisted index (IVF/PQ, sign-LSH, pHash, BM25), plus the
+rollup's own full-build swap — does two kinds of I/O:
 
 1. **Bulk data** (parquet partitions): always read/written THROUGH SPARK,
    which already speaks every Hadoop-compatible filesystem (local, HDFS,

@@ -129,6 +129,20 @@ def test_boolean_knobs_reject_other_values(monkeypatch, tmp_path, name, value):
         resolve_config(env_file=str(tmp_path / "absent.env"))
 
 
+@pytest.mark.parametrize("name,value", [
+    ("EXECUTESYNC_MAX_DOCUMENTS", "abc"),
+    ("EXECUTESYNC_WAIT", "1.5"),
+    ("EXECUTESYNC_CHUNK_SIZE", "10k"),
+])
+def test_integer_knobs_reject_non_integers(monkeypatch, tmp_path, name, value):
+    """The error names the variable, not only the bad literal."""
+    from execute_sync_spark.config import resolve_config
+
+    monkeypatch.setenv(name, value)
+    with pytest.raises(ValueError, match=f"{name} must be an integer"):
+        resolve_config(env_file=str(tmp_path / "absent.env"))
+
+
 @pytest.mark.parametrize("value", ["bogus", "verbose", "trace", "10"])
 def test_log_level_rejects_unknown_names(monkeypatch, tmp_path, value):
     from execute_sync_spark.config import resolve_config

@@ -260,12 +260,15 @@ def test_second_compact_is_a_noop(spark, tmp_path):
     assert _rows(r)[("view", "2024-01-02 01:00:00", "2024-01-02")] == (1, 4.0)
 
 
-def test_sweep_recovers_interrupted_compact(spark, tmp_path, monkeypatch):
+def test_sweep_recovers_interrupted_compact(spark, tmp_path, monkeypatch, caplog):
     """Crash INSIDE compact()'s two-rename window (live renamed aside,
     staged not yet renamed in): the day vanishes from reads and its
     manifest is stranded. sweep() must finish the swap forward from the
     staged output — manifest included, so a replay of an absorbed batch
-    still skips — and reclaim the staged tmp (ADVICE r6 / ROADMAP item)."""
+    still skips — and reclaim the staged tmp (ADVICE r6 / ROADMAP item),
+    reporting both in one structured log record."""
+    import logging
+
     import pytest
 
     from execute_sync_spark.operators import rollup as rl
@@ -297,8 +300,15 @@ def test_sweep_recovers_interrupted_compact(spark, tmp_path, monkeypatch):
             _events(spark, [(3, "2024-01-01 00:30:00", 3, "click", 1.0)]), batch_id=3
         )
 
+    caplog.set_level(logging.INFO, logger="execute_sync_spark.functions.index_commit")
     rep = r.sweep()
     assert rep["restored"]
+    (event,) = [rec.index_commit for rec in caplog.records if hasattr(rec, "index_commit")]
+    assert event == {
+        "event": "sweep", "aside_prefix": "_old_day_", "path": r.path,
+        "restored": rep["restored"], "reclaimed": rep["reclaimed"],
+    }
+    assert any(n.startswith("roll_compact_") for n in event["reclaimed"])
     assert _rows(r) == before
     # manifest survived the forward-finish: absorbed batch replay skips
     assert r.refresh(

@@ -421,7 +421,7 @@ def test_index_stranded_cell_fails_loudly_and_sweep_recovers(spark, tmp_path, mo
             state["crashed"] = True
             raise RuntimeError("simulated crash between the two renames")
 
-    import execute_sync_spark.functions.similarity as sim_mod
+    from execute_sync_spark.functions import index_commit
 
     monkeypatch.setattr("os.rename", crash_mid_swap)
     with pytest.raises(RuntimeError, match="simulated crash"):
@@ -441,7 +441,7 @@ def test_index_stranded_cell_fails_loudly_and_sweep_recovers(spark, tmp_path, mo
         spark, idx, q, centroids, k=3, nprobe=2).collect()))
     assert got == before
     # the forward-finished cell carries its manifest: absorbed replay skips
-    assert "1" in sim_mod._index_absorbed(idx)
+    assert "1" in index_commit.absorbed(idx, index_commit.CELL_SPEC)
     assert similarity.sweep_index(idx) == {"restored": [], "reclaimed": []}
 
 
@@ -455,7 +455,7 @@ def test_index_root_manifest_fast_path(spark, tmp_path):
 
     from tests.conftest import SF_DIR
 
-    import execute_sync_spark.functions.similarity as sim_mod
+    from execute_sync_spark.functions import index_commit
     from execute_sync_spark.functions import similarity
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -470,14 +470,14 @@ def test_index_root_manifest_fast_path(spark, tmp_path):
     root = os.path.join(idx, "_absorbed.json")
     assert os.path.isfile(root)
     assert "9" in json.load(open(root))["batches"]
-    assert "9" in sim_mod._index_absorbed(idx)
+    assert "9" in index_commit.absorbed(idx, index_commit.CELL_SPEC)
     # fast path really is the root file: poison it and watch the answer
     with open(root, "w") as f:
         json.dump({"batches": ["poisoned"]}, f)
-    assert sim_mod._index_absorbed(idx) == {"poisoned"}
+    assert index_commit.absorbed(idx, index_commit.CELL_SPEC) == {"poisoned"}
     # without the root the per-cell walk still finds the truth
     os.remove(root)
-    assert "9" in sim_mod._index_absorbed(idx)
+    assert "9" in index_commit.absorbed(idx, index_commit.CELL_SPEC)
 
 
 def test_recall_at_k_bounds_and_exhaustive_probe_is_perfect(spark):

@@ -10,12 +10,13 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from execute_sync_spark.functions import index_commit
 from execute_sync_spark.functions import similarity as sim
 from tests.conftest import SF_DIR
 
 
 # ---------------------------------------------------------------------------
-# ADVICE r8 #2: _index_check_layout must scan ALL cells — an already-mixed
+# ADVICE r8 #2: index_commit.check_layout must scan ALL cells — an already-mixed
 # index (legacy flat cell + two-level cell) must raise regardless of the
 # order os.listdir happens to return the cells in.
 
@@ -42,7 +43,7 @@ def test_layout_check_rejects_mixed_index_any_order(tmp_path):
     _mk_batch_cell(root, 0)
     _mk_flat_cell(root, 1)
     with pytest.raises(ValueError, match="legacy"):
-        sim._index_check_layout(root)
+        index_commit.check_layout(root, index_commit.CELL_SPEC)
 
 
 def test_layout_check_passes_uniform_two_level(tmp_path):
@@ -50,7 +51,7 @@ def test_layout_check_passes_uniform_two_level(tmp_path):
     os.makedirs(root)
     _mk_batch_cell(root, 0)
     _mk_batch_cell(root, 1)
-    sim._index_check_layout(root)  # no raise
+    index_commit.check_layout(root, index_commit.CELL_SPEC)  # no raise
 
 
 # ---------------------------------------------------------------------------

@@ -4,7 +4,7 @@ and ORC file format."""
 from pyspark.sql import functions as F
 
 from execute_sync_spark.landing import land_ndjson_lines
-from execute_sync_spark.sinks import DuckDBSink, ParquetSink
+from execute_sync_spark.sinks import DuckDBSink, JdbcSink, ParquetSink
 from execute_sync_spark.sources import FileFeedSource, WatermarkStore, sync_once
 from tests.fixtures import feed
 
@@ -175,3 +175,21 @@ def test_sqlite_views_reject_unsafe_schema_identifiers(spark, tmp_path):
     bad = parse_root_schema({"AFE": {"BAD FIELD": {"TYPE": "TEXT"}}})
     with pytest.raises(ValueError, match="unsafe identifier"):
         sink.create_views(bad)
+
+
+def test_jdbc_sink_views_and_prune(spark, tmp_path, monkeypatch):
+    """The test suite has no JDBC driver, so the table read back is a landing
+    frame; prune names the dialect DML instead of an AttributeError."""
+    import pytest
+
+    from execute_sync_spark.schema.model import parse_root_schema
+
+    sink = JdbcSink(spark, f"jdbc:sqlite:{tmp_path / 'wh.db'}")
+    landed = land_ndjson_lines(spark, feed.batch_lines()[0], feed.BATCH_DATES[0])
+    monkeypatch.setattr(sink, "read", lambda: landed)
+    views = sink.create_views(parse_root_schema(FileFeedSource(_feed_dir(tmp_path)).fetch_schema()))
+    assert {"AFE", "VENDOR"} <= set(views)
+    assert spark.sql("SELECT count(*) AS n FROM EXECUTE_DOCUMENTS").first().n == landed.count()
+    assert views["AFE"].count() == spark.sql("SELECT * FROM AFE").count() > 0
+    with pytest.raises(NotImplementedError, match=r"DIALECTS\[dialect\]\['prune'\].*sqlserver"):
+        sink.prune()

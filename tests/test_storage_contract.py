@@ -11,7 +11,7 @@ Two proofs that the recoverable-commit protocols — ``HourlyRollup``
    must still pass AND the recorder must have seen every primitive the
    protocols claim to use. A static source check pins the complement:
    zero raw ``os.rename``/``shutil``/``os.listdir``/``open(`` left in
-   the two protocol files.
+   the protocol file (functions/index_commit.py) and its clients.
 2. **FakeConditionalStore** (task 7): rename implemented as a
    conditional POINTER SWAP — the S3 manifest-pointer idiom
    ``storage.py`` documents. Staged directories are moved to an
@@ -250,18 +250,19 @@ def _index_cycle(spark, path):
 
 
 def test_protocol_files_have_no_raw_fs_calls():
-    """The complement of the injection test: the two protocol files
-    contain zero raw commit-metadata filesystem calls — everything goes
-    through storage.STORE (path math via os.path and Spark bulk I/O are
-    allowed; that's the documented boundary)."""
+    """The complement of the injection test: the protocol file and its
+    clients contain zero raw commit-metadata filesystem calls — everything
+    goes through storage.STORE (path math via os.path and Spark bulk I/O
+    are allowed; that's the documented boundary)."""
     import execute_sync_spark.operators.rollup as rollup_mod
+    from execute_sync_spark.functions import index_commit as commit_mod
     from execute_sync_spark.functions import similarity as sim_mod
 
     forbidden = re.compile(
         r"\bos\.rename\b|\bshutil\.|\bos\.listdir\b|\bos\.remove\b"
         r"|\bos\.utime\b|\bos\.path\.getmtime\b|(?<![\w.])open\("
     )
-    for mod in (rollup_mod, sim_mod):
+    for mod in (commit_mod, rollup_mod, sim_mod):
         with open(mod.__file__) as f:
             src = f.read()
         hits = [

@@ -356,6 +356,68 @@ def test_index_append_during_compact_window_is_not_lost(spark, tmp_path, swap_st
     ) == []
 
 
+def test_rollup_refresh_during_compact_window_is_not_lost(spark, tmp_path, swap_store):  # noqa: F811
+    """The same race against the rollup: a refresh lands in a day between
+    compact's two renames. sweep must merge the pre-compact batches back
+    beside the refreshed one (restored, not reclaimed), so the totals
+    still count all three batches."""
+    store = swap_store(AppendInWindowStore())
+    r, _ = _rollup_with_two_batches(spark, str(tmp_path / "rollup"))
+    b3 = [(3, "2024-01-01 00:50:00", 3, "click", 4.0)]
+    assert r.refresh(_events(spark, b3), batch_id=3) == ["2024-01-01"]
+    expect = {("click", "2024-01-01 00:00:00", "2024-01-01"): (3, 9.0)}
+
+    # stage the racer: lift batch 3's dir out; the armed store lands it
+    # back as the refresh's write inside the swap window
+    live = os.path.join(r.path, "day=2024-01-01")
+    stash = str(tmp_path / "racer_batch")
+    os.rename(os.path.join(live, "batch_id=3"), stash)
+    store.arm("_old_day_2024-01-01_", stash, live, "batch_id=3")
+    with pytest.raises(OSError):
+        r.compact()
+    assert store.planted  # the race actually happened
+
+    out = r.sweep(min_age_s=0)
+    assert any(n.startswith("_old_day_2024-01-01_") for n in out["restored"])
+    assert not any(n.startswith("_old_day_2024-01-01_") for n in out["reclaimed"])
+    assert _rows(r) == expect  # batches 1 and 2 survived beside batch 3
+
+    # a clean retry compacts all three, and a replay of batch 3 is absorbed
+    assert r.compact() == ["2024-01-01"]
+    assert r.refresh(_events(spark, b3), batch_id=3) == []
+    assert _rows(r) == expect
+
+
+def test_partially_committed_batch_replays_missing_leaves(spark, tmp_path):
+    """A dynamic-overwrite commit that dies partway through its partition
+    moves leaves some cells without the batch. After a compact, the
+    replay must write exactly those cells — skipping the whole batch
+    because some manifest lists it would lose them for good."""
+    from execute_sync_spark.functions import similarity
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    centroids = emb.filter(F.col("vec_id") < 4)
+    new = emb.filter((F.col("vec_id") >= 40) & (F.col("vec_id") < 60))
+    idx = similarity.build_cell_index(
+        emb.filter(F.col("vec_id") < 40), centroids, str(tmp_path / "ivf")
+    )
+    similarity.append_cell_index(new, centroids, idx, batch_id=7)
+    n_total = spark.read.parquet(idx).count()
+
+    # the partition Spark's commitJob never moved into place
+    cell = next(
+        c[len("cell_id="):]
+        for c in sorted(os.listdir(idx))
+        if os.path.isdir(os.path.join(idx, c, "batch_id=7"))
+    )
+    shutil.rmtree(os.path.join(idx, f"cell_id={cell}", "batch_id=7"))
+    assert spark.read.parquet(idx).count() < n_total
+
+    assert similarity.compact_index(spark, idx)
+    assert similarity.append_cell_index(new, centroids, idx, batch_id=7) == [int(cell)]
+    assert spark.read.parquet(idx).count() == n_total
+
+
 # ---------------------------------------------------------------------------
 # Fourth fault axis (round 14): non-atomic copy+delete rename (S3 without
 # conditional writes). storage.py has always CLAIMED every protocol here
