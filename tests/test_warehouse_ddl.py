@@ -15,6 +15,9 @@ ways:
    AFE_PARTNERS = 2, TICKET_LINES = 25 rows summing QTY = 300.
 """
 
+import json
+import os
+
 import pytest
 
 from execute_sync_spark.landing import land_ndjson_lines
@@ -284,3 +287,75 @@ def test_cli_create_views_dialect_requires_dry_run(tmp_path, capsys):
     # the DDL is still emitted (informational) but the error names the cause
     assert "CREATE FILE FORMAT IF NOT EXISTS" in captured.out
     assert "requires --dry-run" in captured.err
+
+
+# every shape the forest walk distinguishes: a record in a record, a list
+# under a record, a record (and a record inside it) under a list item, a
+# list inside a list, unknown types, an empty record, a DOCUMENT_ID field
+# and a declared LISTITEM_ID in a list
+DEEP_SCHEMA = parse_root_schema({
+    "SHIPMENT": {
+        "DOCUMENT_ID": {"TYPE": "TEXT"},
+        "TITLE": {"TYPE": "TEXT"},
+        "BUYER": {"TYPE": "DOCUMENT", "DOCUMENT_TYPE": "PARTY"},
+        "SHAPE": {"TYPE": "GEOMETRY"},
+        "SHIP": {"TYPE": "RECORD", "RECORD_TYPE": {
+            "CITY": {"TYPE": "TEXT"},
+            "GEO": {"TYPE": "RECORD", "RECORD_TYPE": {
+                "LAT": {"TYPE": "DECIMAL"},
+                "AT": {"TYPE": "DATETIME"},
+            }},
+            "STOPS": {"TYPE": "RECORD LIST", "RECORD_TYPE": {
+                "SEQ": {"TYPE": "INTEGER"},
+                "DONE": {"TYPE": "BOOLEAN"},
+            }},
+        }},
+        "EMPTY": {"TYPE": "RECORD", "RECORD_TYPE": {}},
+        "LINES": {"TYPE": "RECORD LIST", "RECORD_TYPE": {
+            "LISTITEM_ID": {"TYPE": "TEXT"},
+            "QTY": {"TYPE": "INTEGER"},
+            "OWNER": {"TYPE": "DOCUMENT", "DOCUMENT_TYPE": "PARTY"},
+            "SPEC": {"TYPE": "RECORD", "RECORD_TYPE": {
+                "CODE": {"TYPE": "GUID"},
+                "DIM": {"TYPE": "RECORD", "RECORD_TYPE": {
+                    "W": {"TYPE": "DECIMAL"},
+                }},
+            }},
+            "PARTS": {"TYPE": "RECORD LIST", "RECORD_TYPE": {
+                "PN": {"TYPE": "TEXT"},
+            }},
+            "BLOB": {"TYPE": "RASTER"},
+        }},
+    },
+    "PARTY": {"UWI": {"TYPE": "UWI"}},
+})
+
+FOREST_GOLDEN = os.path.join(os.path.dirname(__file__), "fixtures", "view_forest_golden.json")
+
+
+def _every_dialect_forest(tmp_path) -> dict:
+    """{schema: {output: [[view, sql], ...]}} for every SQL view-forest
+    output, in emission order."""
+    from execute_sync_spark.sinks.sqlite_sink import SqliteSink
+
+    out: dict = {}
+    for label, root in (("mini", MINI_SCHEMA), ("deep", DEEP_SCHEMA)):
+        sqlite = SqliteSink(None, str(tmp_path / f"{label}.sqlite"))
+        outputs = {
+            "snowflake": ddl.snowflake_views(root),
+            "databricks": ddl.databricks_views(root),
+            "databricks_qualified": ddl.databricks_views(root, catalog="main", schema="sync"),
+            "sqlserver": ddl.sqlserver_views(root),
+            "sqlite": sqlite.create_views(root),
+        }
+        out[label] = {k: [list(kv) for kv in v.items()] for k, v in outputs.items()}
+    return out
+
+
+def test_every_dialect_forest_matches_golden(tmp_path):
+    """Every view of every SQL dialect, byte for byte and in order, for the
+    mini and the deep schema. The golden was captured from the recursive
+    per-dialect generators; regenerate it only for a deliberate DDL change."""
+    with open(FOREST_GOLDEN) as f:
+        golden = json.load(f)
+    assert _every_dialect_forest(tmp_path) == golden
