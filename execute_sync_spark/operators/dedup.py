@@ -77,7 +77,7 @@ def swap_type_partitions(tmp: str, target: str) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def prune_parquet(spark, path: str, file_format: str = "parquet", schema=None) -> int:
+def prune_parquet(spark, path: str, schema=None) -> int:
     """D3: compact a ``type``-partitioned landing directory to only-current
     copies.
 
@@ -96,10 +96,10 @@ def prune_parquet(spark, path: str, file_format: str = "parquet", schema=None) -
     """
     import uuid
 
-    reader = spark.read.format(file_format)
+    reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    df = reader.load(path)
+    df = reader.parquet(path)
 
     # Which partitions hold superseded rows, and how many? One aggregate
     # answers both: its groups are the dirty partitions (a tiny list,
@@ -112,6 +112,6 @@ def prune_parquet(spark, path: str, file_format: str = "parquet", schema=None) -
     dirty = [r["type"] for r in superseded]
     kept = latest_all_versions(df.filter(F.col("type").isin(dirty)))
     tmp = f"{path.rstrip('/')}_pruned_{uuid.uuid4().hex[:8]}"
-    kept.write.mode("overwrite").format(file_format).partitionBy("type").save(tmp)
+    kept.write.mode("overwrite").partitionBy("type").parquet(tmp)
     swap_type_partitions(tmp, path)
     return sum(r["count"] for r in superseded)

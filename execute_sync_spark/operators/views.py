@@ -1,8 +1,9 @@
 """The view-forest compiler: schema tree -> shredded relational views.
 
-One Spark implementation replaces the reference's four SQL-dialect generators
-(snowflake.go:314-379, databricks.go:333-438, sqlserver.go:257-339,
-sqlite.go:200-270). Semantics per node (SURVEY §2.V):
+The Spark rendering of ``schema.model.view_forest``, the one walk that also
+feeds the Snowflake / Databricks / SQL Server DDL (sinks/ddl.py) and the
+SQLite sink (snowflake.go:314-379, databricks.go:333-438,
+sqlserver.go:257-339, sqlite.go:200-270). Semantics per node (SURVEY §2.V):
 
   V1  per-type filter: type = <docType>; chunk = 0 unless the view flattens a
       list (list slices live in chunk rows 1..n, snowflake.go:369-371)
@@ -12,11 +13,11 @@ sqlite.go:200-270). Semantics per node (SURVEY §2.V):
       type with from_json(full StructType); Catalyst prunes the parse to the
       fields each view actually reads
   V4  DOCUMENT refs -> FIELD.DOCUMENT_ID string FK column
-  V5  RECORD -> child view <parent>_<field> over the deeper struct path (1:1)
-  V6  RECORD LIST -> child view = explode over ALL chunk rows; RECORD children
-      under a list item recurse with the same explode
-  V7  unknown types / list-in-list skipped with a warning, as in every
-      reference dialect (snowflake.go:351-356)
+  V5  RECORD node -> the deeper struct path of its parent's frame (1:1)
+  V6  RECORD LIST node -> explode over ALL chunk rows; RECORD nodes under a
+      list item read the same exploded frame (one per doc type and list)
+  V7  unknown types / list-in-list: dropped from the forest by the walk,
+      with a warning, as in every reference dialect (snowflake.go:351-356)
 
 Deviations from the reference (deliberate, documented):
 - BOOLEAN stays BooleanType (Snowflake casts to int, snowflake.go:343-344);
@@ -24,7 +25,8 @@ Deviations from the reference (deliberate, documented):
   date, databricks.go:374-375). We pick one canonical typed semantics.
 - Direct list views also expose LISTITEM_ID (the reference only surfaces it
   on RECORD children of a list item — snowflake.go:320-323); additive column,
-  needed to key flattened rows.
+  needed to key flattened rows. A field the schema declares as LISTITEM_ID
+  is not projected a second time in a flattened view.
 - Fields literally named DOCUMENT_ID are skipped in every dialect (the doc id
   is already projected) — kept.
 
@@ -43,14 +45,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from execute_sync_spark.schema.compiler import LISTITEM_ID, doc_type_struct
-from execute_sync_spark.schema.model import (
-    SCALAR_TYPES,
-    T_DOCUMENT,
-    T_RECORD,
-    T_RECORD_LIST,
-    DocumentSchema,
-    RootSchema,
-)
+from execute_sync_spark.schema.model import T_DOCUMENT, RootSchema, view_forest
 
 log = logging.getLogger(__name__)
 
@@ -71,89 +66,53 @@ def create_views(latest_df: DataFrame, root: RootSchema, register: bool = True) 
     as a temp view so it is queryable via spark.sql.
     """
     views: dict[str, DataFrame] = {}
-    for doc_type, doc_schema in root.items():
-        struct = doc_type_struct(doc_schema)
-        parsed = latest_df.filter(F.col("type") == doc_type).withColumn(
-            _PARSED, F.from_json(F.col("data"), struct)
-        )
-        _build_node(
-            views,
-            parsed,
-            view_name=doc_type,
-            record=doc_schema,
-            path=F.col(_PARSED),
-            is_root=True,
-        )
+    parsed: dict[str, DataFrame] = {}
+    exploded: dict[tuple[str, tuple[str, ...]], DataFrame] = {}
+    for node in view_forest(root):
+        if node.doc_type not in parsed:
+            struct = doc_type_struct(root[node.doc_type])
+            parsed[node.doc_type] = latest_df.filter(F.col("type") == node.doc_type).withColumn(
+                _PARSED, F.from_json(F.col("data"), struct)
+            )
+        cols: list[Column] = [F.col("id").alias("DOCUMENT_ID")]
+        if node.list_path:
+            # V6: explode across ALL chunk rows — a logical list is the union
+            # of its chunk slices (§1.4); every view under the list item reads
+            # the same exploded frame
+            key = (node.doc_type, node.list_path)
+            if key not in exploded:
+                exploded[key] = parsed[node.doc_type].select(
+                    F.col("id"), F.explode(_struct_path(_PARSED, node.list_path)).alias(_ITEM)
+                )
+            base = exploded[key]
+            record = _struct_path(_ITEM, node.path)
+            cols.append(F.col(_ITEM)[LISTITEM_ID].alias(LISTITEM_ID))
+        else:
+            base = parsed[node.doc_type].filter(F.col("chunk") == 0)
+            record = _struct_path(_PARSED, node.path)
+        if node.is_root:
+            cols.extend(F.col(src).alias(dst) for src, dst in _META_COLS)
+        for field, meta in node.fields:
+            if node.list_path and field == LISTITEM_ID:
+                continue  # the item's LISTITEM_ID is already projected
+            col = record[field]["DOCUMENT_ID"] if meta.type == T_DOCUMENT else record[field]
+            cols.append(col.alias(field))
+        if node.name in views:
+            # underscore-joined path names can collide (A + B_C vs A_B + C);
+            # the reference's CREATE OR REPLACE silently last-wins in random
+            # Go map order — we last-win deterministically (schema order) and
+            # warn.
+            log.warning("view name collision: %s redefined (path-name ambiguity)", node.name)
+        views[node.name] = base.select(*cols)
     if register:
         for name, df in views.items():
             df.createOrReplaceTempView(name)
     return views
 
 
-def _build_node(
-    views: dict[str, DataFrame],
-    parsed: DataFrame,
-    view_name: str,
-    record: DocumentSchema,
-    path: Column,
-    is_root: bool,
-    listitem_col: Column | None = None,
-) -> None:
-    """Emit one view and recurse into RECORD / RECORD LIST children.
-
-    ``path`` is the struct-valued Column this node's fields live under —
-    ``__parsed`` for roots, ``__parsed.A.B`` for nested records, ``__item``
-    for an exploded list item and ``__item.A`` for a record under it (in
-    the last two cases ``parsed`` is the exploded frame and
-    ``listitem_col`` carries the item's LISTITEM_ID).
-    """
-    flattened = listitem_col is not None
-    cols: list[Column] = [F.col("id").alias("DOCUMENT_ID")]
-    if flattened:
-        cols.append(listitem_col.alias(LISTITEM_ID))
-    if is_root:
-        cols.extend(F.col(src).alias(dst) for src, dst in _META_COLS)
-
-    for field, meta in record.items():
-        if field == "DOCUMENT_ID":
-            continue  # doc id is already projected (all dialects skip it)
-        if meta.type in SCALAR_TYPES:
-            cols.append(path[field].alias(field))
-        elif meta.type == T_DOCUMENT:
-            cols.append(path[field]["DOCUMENT_ID"].alias(field))
-        elif meta.type == T_RECORD:
-            _build_node(
-                views,
-                parsed,
-                view_name=f"{view_name}_{field}",
-                record=meta.record_type or {},
-                path=path[field],
-                is_root=False,
-                listitem_col=listitem_col,
-            )
-        elif meta.type == T_RECORD_LIST:
-            if flattened:
-                log.warning("skipping %s_%s: list-in-list unsupported", view_name, field)
-                continue
-            # V6: explode across ALL chunk rows — a logical list is the union
-            # of its chunk slices (§1.4)
-            item = F.col(_ITEM)
-            _build_node(
-                views,
-                parsed.select(F.col("id"), F.explode(path[field]).alias(_ITEM)),
-                view_name=f"{view_name}_{field}",
-                record=meta.record_type or {},
-                path=item,
-                is_root=False,
-                listitem_col=item[LISTITEM_ID],
-            )
-        else:
-            log.warning("skipping %s.%s of unknown type %s", view_name, field, meta.type)
-
-    base = parsed if flattened else parsed.filter(F.col("chunk") == 0)
-    if view_name in views:
-        # underscore-joined path names can collide (A + B_C vs A_B + C); the
-        # reference's CREATE OR REPLACE silently last-wins in random Go map
-        # order — we last-win deterministically (schema order) and warn.
-        log.warning("view name collision: %s redefined (path-name ambiguity)", view_name)
-    views[view_name] = base.select(*cols)
+def _struct_path(column: str, path: tuple[str, ...]) -> Column:
+    """The struct field at ``path`` under ``column``."""
+    col = F.col(column)
+    for field in path:
+        col = col[field]
+    return col

@@ -17,7 +17,8 @@ DATE_UNZONED as TimestampNTZ):
     DATETIME              -> TimestampType (zoned) / TimestampNTZType (unzoned)
     DOCUMENT              -> Struct<DOCUMENT_ID: string>   (FK reference)
     RECORD                -> StructType (recursive)
-    RECORD LIST           -> ArrayType(StructType) with LISTITEM_ID column
+    RECORD LIST           -> ArrayType(StructType) with one LISTITEM_ID column
+                             (a declared LISTITEM_ID field is that column)
     (unknown)             -> skipped with a warning (snowflake.go:357-358)
 """
 
@@ -84,6 +85,8 @@ def _record_struct(doc: DocumentSchema, *, in_list: bool, with_listitem_id: bool
     if with_listitem_id:
         fields.append(T.StructField(LISTITEM_ID, T.StringType(), True))
     for fname, fmeta in doc.items():
+        if with_listitem_id and fname == LISTITEM_ID:
+            continue  # a declared LISTITEM_ID is the one added above
         dtype = _field_type(fmeta, in_list=in_list)
         if dtype is None:
             continue

@@ -12,14 +12,18 @@ fixed in code — it is fetched (or loaded from a fixture file) as JSON of shape
 and compiled at runtime. ``RECORD_TYPE`` recurses (RECORD / RECORD LIST).
 
 ``filter_inactive`` mirrors the recursive inactive-field pruning applied when
-HIDE_INACTIVE_FIELDS is set (schema.go:96-119).
+HIDE_INACTIVE_FIELDS is set (schema.go:96-119). ``view_forest`` is the one
+walk that turns the tree into the list of views every dialect renders.
 """
 
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
-from typing import Optional
+import logging
+from dataclasses import dataclass, replace
+from typing import Callable, Optional
+
+log = logging.getLogger(__name__)
 
 # Field type constants — the complete set the reference's view generators
 # switch on (/root/reference/src/internal/warehouses/snowflake/snowflake.go:336-359).
@@ -81,57 +85,84 @@ def load_root_schema(path: str) -> RootSchema:
         return parse_root_schema(json.load(f))
 
 
-def filter_inactive(root: RootSchema) -> RootSchema:
-    """Recursively drop fields with ACTIVE == false (schema.go:96-119).
-
-    Returns a new tree; the input is not mutated.
-    """
+def _drop_fields(root: RootSchema, drop: Callable[[FieldMetadata], bool]) -> RootSchema:
+    """A new tree without the fields ``drop`` selects, at every depth; the
+    input is not mutated."""
 
     def _filter_doc(doc: DocumentSchema) -> DocumentSchema:
-        out: DocumentSchema = {}
-        for fname, fmeta in doc.items():
-            if not fmeta.active:
-                continue
-            if fmeta.record_type is not None:
-                fmeta = FieldMetadata(
-                    name=fmeta.name,
-                    active=fmeta.active,
-                    type=fmeta.type,
-                    nullable=fmeta.nullable,
-                    size=fmeta.size,
-                    record_type=_filter_doc(fmeta.record_type),
-                    formula=fmeta.formula,
-                    document_type=fmeta.document_type,
-                    date_unzoned=fmeta.date_unzoned,
-                )
-            out[fname] = fmeta
-        return out
+        return {
+            fname: fmeta if fmeta.record_type is None
+            else replace(fmeta, record_type=_filter_doc(fmeta.record_type))
+            for fname, fmeta in doc.items()
+            if not drop(fmeta)
+        }
 
     return {doc_type: _filter_doc(doc) for doc_type, doc in root.items()}
+
+
+def filter_inactive(root: RootSchema) -> RootSchema:
+    """Recursively drop fields with ACTIVE == false (schema.go:96-119)."""
+    return _drop_fields(root, lambda f: not f.active)
 
 
 def filter_calcs(root: RootSchema) -> RootSchema:
     """Drop FORMULA (calculated) fields — the state when the feed is fetched
     without calc=true (schema.go:51-53, config INCLUDE_CALCS)."""
+    return _drop_fields(root, lambda f: f.is_calc)
 
-    def _filter_doc(doc: DocumentSchema) -> DocumentSchema:
-        out: DocumentSchema = {}
-        for fname, fmeta in doc.items():
-            if fmeta.is_calc:
+
+@dataclass(frozen=True)
+class ViewNode:
+    """One view of the forest, in dialect-neutral terms.
+
+    ``path`` is the record's field names counted from the document root, or
+    from the list item when the view flattens a list; ``list_path`` is the
+    path of that RECORD LIST from the document root (None when the view
+    reads one row per document). ``fields`` are the scalar and DOCUMENT
+    fields the view projects, in schema order.
+    """
+
+    name: str
+    doc_type: str
+    is_root: bool
+    path: tuple[str, ...]
+    list_path: Optional[tuple[str, ...]]
+    fields: tuple[tuple[str, FieldMetadata], ...]
+
+
+def view_forest(root: RootSchema) -> list[ViewNode]:
+    """The view forest every dialect renders (snowflake.go:314-379, SURVEY
+    §2.V): one view per doc type, ``<parent>_<field>`` per nested RECORD and
+    RECORD LIST, children before their parent, in schema order.
+
+    Skipped everywhere: fields named DOCUMENT_ID (the doc id is already
+    projected), a RECORD LIST inside a list item and unknown types — the last
+    two with a warning (snowflake.go:351-358).
+    """
+    out: list[ViewNode] = []
+
+    def _walk(doc_type: str, name: str, record: DocumentSchema, path: tuple[str, ...],
+              list_path: Optional[tuple[str, ...]]) -> None:
+        fields: list[tuple[str, FieldMetadata]] = []
+        for fname, fmeta in record.items():
+            if fname == "DOCUMENT_ID":
                 continue
-            if fmeta.record_type is not None:
-                fmeta = FieldMetadata(
-                    name=fmeta.name,
-                    active=fmeta.active,
-                    type=fmeta.type,
-                    nullable=fmeta.nullable,
-                    size=fmeta.size,
-                    record_type=_filter_doc(fmeta.record_type),
-                    formula=fmeta.formula,
-                    document_type=fmeta.document_type,
-                    date_unzoned=fmeta.date_unzoned,
-                )
-            out[fname] = fmeta
-        return out
+            if fmeta.type in SCALAR_TYPES or fmeta.type == T_DOCUMENT:
+                fields.append((fname, fmeta))
+            elif fmeta.type == T_RECORD:
+                _walk(doc_type, f"{name}_{fname}", fmeta.record_type or {},
+                      path + (fname,), list_path)
+            elif fmeta.type == T_RECORD_LIST:
+                if list_path is not None:
+                    log.warning("skipping %s_%s: list-in-list unsupported", name, fname)
+                    continue
+                _walk(doc_type, f"{name}_{fname}", fmeta.record_type or {},
+                      (), path + (fname,))
+            else:
+                log.warning("skipping %s.%s of unknown type %s", name, fname, fmeta.type)
+        is_root = list_path is None and not path
+        out.append(ViewNode(name, doc_type, is_root, path, list_path, tuple(fields)))
 
-    return {doc_type: _filter_doc(doc) for doc_type, doc in root.items()}
+    for doc_type, doc_schema in root.items():
+        _walk(doc_type, doc_type, doc_schema, (), None)
+    return out

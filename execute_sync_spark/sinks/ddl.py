@@ -3,8 +3,10 @@ Snowflake / Databricks / SQL Server warehouses.
 
 No live warehouse is reachable from this environment, so the bootstrap,
 upload-plan, prune, and view-forest SQL the reference executes over a
-connection is generated here as TEXT from the same schema walk the SQLite
-sink uses. ``cli.py create_views --dialect snowflake --dry-run`` prints it;
+connection is generated here as TEXT. The view forest itself comes from
+``schema.model.view_forest``, the one walk the Spark views and the SQLite
+sink render too; each dialect here only renders one ``ViewNode`` into one
+statement. ``cli.py create_views --dialect snowflake --dry-run`` prints it;
 tests/test_warehouse_ddl.py golden-tests it. A production deployment feeds
 these strings to the warehouse's own client (snowflake-connector /
 databricks-sql / pyodbc) — the only untested step is the connect call.
@@ -30,8 +32,10 @@ Reference shapes mirrored (file:line):
 
 All identifiers interpolated into DDL (doc types, field names — both from
 the externally-fetched schema) are validated against ``[A-Za-z0-9_]+``
-first: the reference interpolates them raw, which breaks (or injects SQL)
-on a hostile schema; we fail loudly instead.
+by ``checked_forest`` before any statement is rendered: the reference
+interpolates them raw, which breaks (or injects SQL) on a hostile schema; we
+fail loudly instead. Fields the forest skips never reach the SQL and are not
+checked.
 """
 
 from __future__ import annotations
@@ -39,12 +43,10 @@ from __future__ import annotations
 import re
 
 from execute_sync_spark.schema.model import (
-    SCALAR_TYPES,
     T_DOCUMENT,
-    T_RECORD,
-    T_RECORD_LIST,
-    DocumentSchema,
     RootSchema,
+    ViewNode,
+    view_forest,
 )
 
 TABLE = "EXECUTE_DOCUMENTS"
@@ -58,6 +60,18 @@ def _check_ident(name: str) -> str:
     if not _IDENT.match(name or ""):
         raise ValueError(f"unsafe identifier from schema: {name!r}")
     return name
+
+
+def checked_forest(root: RootSchema) -> list[ViewNode]:
+    """``view_forest(root)`` once every name the view DDL interpolates is
+    checked: each view name (it holds the doc type and every field on the
+    view's path, list included) and each projected field name."""
+    forest = view_forest(root)
+    for node in forest:
+        _check_ident(node.name)
+        for fname, _ in node.fields:
+            _check_ident(fname)
+    return forest
 
 
 def _qualify(name: str, catalog: str | None = None, schema: str | None = None) -> str:
@@ -148,66 +162,51 @@ WHERE (ed.TYPE, ed.ID, ed.VERSION) IN (
     GROUP BY TYPE, ID
 )"""
     )
-    for doc_type, doc_schema in root.items():
-        _snowflake_view(out, _check_ident(doc_type), doc_type, doc_schema,
-                        parent=None, root="data", flatten="")
+    for node in checked_forest(root):
+        out[node.name] = _snowflake_view(node)
     return out
 
 
-def _snowflake_view(
-    out: dict[str, str],
-    doc_type: str,
-    view_name: str,
-    schema: DocumentSchema,
-    parent: str | None,
-    root: str,
-    flatten: str,
-) -> None:
-    # column walk mirrors snowflake.go:314-360
+_SNOWFLAKE_CASTS = {"TEXT": "string", "GUID": "string", "UWI": "string",
+                    "INTEGER": "int", "DECIMAL": "float", "BOOLEAN": "int",
+                    "DATETIME": "timestamp_tz"}
+
+
+def _snowflake_view(node: ViewNode) -> str:
+    # column shapes mirror snowflake.go:314-360; a flattened view reads the
+    # FLATTEN ``value``, everything else the ``data`` variant
+    base = "value" if node.list_path else "data"
+    root = ":".join((base, *node.path))
     cols = ["id AS DOCUMENT_ID"]
-    if root.startswith("value:"):
+    if node.list_path and node.path:
+        # only records under a list item surface it (snowflake.go:320-323)
         cols.append("value:LISTITEM_ID::string AS LISTITEM_ID")
-    if parent is None:
+    if node.is_root:
         cols += [
             'deleted AS "_DELETED"',
             'author AS "_AUTHOR"',
             'version AS "_VERSION"',
             'date AS "_DATE"',
         ]
-    casts = {"TEXT": "string", "GUID": "string", "UWI": "string",
-             "INTEGER": "int", "DECIMAL": "float", "BOOLEAN": "int",
-             "DATETIME": "timestamp_tz"}
-    for fname, fmeta in schema.items():
-        if fname == "DOCUMENT_ID":
-            continue
-        _check_ident(fname)
-        if fmeta.type in SCALAR_TYPES:
-            cols.append(f"{root}:{fname}::{casts[fmeta.type]} AS {fname}")
-        elif fmeta.type == T_DOCUMENT:
+    for fname, fmeta in node.fields:
+        if fmeta.type == T_DOCUMENT:
             ref = fmeta.document_type or "?"
             cols.append(
                 f"{root}:{fname}:DOCUMENT_ID::string AS {fname}"
                 f" /* References {ref}.DOCUMENT_ID */"
             )
-        elif fmeta.type == T_RECORD:
-            _snowflake_view(out, doc_type, f"{view_name}_{fname}",
-                            fmeta.record_type or {}, parent=view_name,
-                            root=f"{root}:{fname}", flatten=flatten)
-        elif fmeta.type == T_RECORD_LIST:
-            if not root.startswith("data"):
-                continue  # list-in-list unsupported (snowflake.go:352-355)
-            _snowflake_view(out, doc_type, f"{view_name}_{fname}",
-                            fmeta.record_type or {}, parent=view_name,
-                            root="value",
-                            flatten=f", LATERAL FLATTEN( INPUT => {root}:{fname})")
-        # unknown types skipped (snowflake.go:357-358)
+        else:
+            cols.append(f"{root}:{fname}::{_SNOWFLAKE_CASTS[fmeta.type]} AS {fname}")
+    flatten = ""
+    if node.list_path:
+        flatten = f", LATERAL FLATTEN( INPUT => {':'.join(('data', *node.list_path))})"
     sql = (
-        f"CREATE OR REPLACE SECURE VIEW {view_name} AS SELECT {', '.join(cols)}"
-        f" FROM {TABLE}_LATEST{flatten} WHERE type='{doc_type}'"
+        f"CREATE OR REPLACE SECURE VIEW {node.name} AS SELECT {', '.join(cols)}"
+        f" FROM {TABLE}_LATEST{flatten} WHERE type='{node.doc_type}'"
     )
     if not flatten:
         sql += " AND chunk=0"
-    out[view_name] = sql
+    return sql
 
 
 # ---------------------------------------------------------------------------
@@ -298,95 +297,70 @@ ON ed.type = latest.type
  AND ed.id = latest.id
  AND ed.version = latest.version"""
     )
-    for doc_type, doc_schema in root.items():
-        _databricks_view(out, _check_ident(doc_type), doc_type, doc_schema,
-                         parent=None, root="data", path="$", flatten="",
-                         catalog=catalog, schema_ns=schema)
+    for node in checked_forest(root):
+        out[node.name] = _databricks_view(node, catalog, schema)
     return out
 
 
-def _databricks_view(
-    out: dict[str, str],
-    doc_type: str,
-    view_name: str,
-    schema: DocumentSchema,
-    parent: str | None,
-    root: str,
-    path: str,
-    flatten: str,
-    catalog: str | None,
-    schema_ns: str | None = None,
-) -> None:
-    # mirror databricks.go:333-430: top-level views read the pre-parsed
+_DATABRICKS_CASTS = {"TEXT": "string", "GUID": "string", "UWI": "string",
+                     "INTEGER": "int", "DECIMAL": "float", "BOOLEAN": "boolean",
+                     # parity quirk: the reference casts DATETIME to date here
+                     # (databricks.go:374) — kept verbatim
+                     "DATETIME": "date"}
+
+
+def _databricks_view(node: ViewNode, catalog: str | None, schema_ns: str | None) -> str:
+    # mirror databricks.go:333-430: root views read the pre-parsed
     # parsed_json column off _LATEST; nested views re-parse in a subquery
     q = lambda n: _qualify(n, catalog, schema_ns)  # noqa: E731
+    root = "value" if node.list_path else "data"
     cols = ["id AS DOCUMENT_ID"]
-    if root == "value" and path != "$":
+    if node.list_path and node.path:
         cols.append("CAST(get_json_object(value, '$.LISTITEM_ID') AS string) AS LISTITEM_ID")
-    if parent is None:
+    if node.is_root:
         cols += ["deleted AS _DELETED", "author AS _AUTHOR",
                  "version AS _VERSION", "date AS _DATE"]
         parsed = "parsed_json"
-        parse_clause = None
     else:
         parsed = "parsed_data"
-        parse_clause = (
-            f"from_json(get_json_object({root}, '{path}'),"
-            f" 'map<string, string>') AS parsed_data"
-        )
-    casts = {"TEXT": "string", "GUID": "string", "UWI": "string",
-             "INTEGER": "int", "DECIMAL": "float", "BOOLEAN": "boolean",
-             # parity quirk: the reference casts DATETIME to date here
-             # (databricks.go:374) — kept verbatim
-             "DATETIME": "date"}
-    for fname, fmeta in schema.items():
-        if fname == "DOCUMENT_ID":
-            continue
-        _check_ident(fname)
-        if fmeta.type in SCALAR_TYPES:
-            cols.append(f"CAST({parsed}['{fname}'] AS {casts[fmeta.type]}) AS {fname}")
-        elif fmeta.type == T_DOCUMENT:
+    for fname, fmeta in node.fields:
+        if fmeta.type == T_DOCUMENT:
             ref = fmeta.document_type or "?"
             cols.append(
                 f"CAST(get_json_object({parsed}['{fname}'], '$.DOCUMENT_ID') AS string)"
                 f" AS {fname} /* References {ref}.DOCUMENT_ID */"
             )
-        elif fmeta.type == T_RECORD:
-            _databricks_view(out, doc_type, f"{view_name}_{fname}",
-                             fmeta.record_type or {}, parent=view_name,
-                             root=root, path=f"{path}.{fname}", flatten=flatten,
-                             catalog=catalog, schema_ns=schema_ns)
-        elif fmeta.type == T_RECORD_LIST:
-            if root != "data":
-                continue  # list-in-list unsupported (databricks.go:383-386)
-            explode = (
-                f" lateral view explode(from_json(parsed_json['{fname}'],"
-                f" 'array<string>')) AS value"
-            )
-            _databricks_view(out, doc_type, f"{view_name}_{fname}",
-                             fmeta.record_type or {}, parent=view_name,
-                             root="value", path="$", flatten=explode,
-                             catalog=catalog, schema_ns=schema_ns)
-        # unknown types skipped (databricks.go:388-389)
+        else:
+            cols.append(f"CAST({parsed}['{fname}'] AS {_DATABRICKS_CASTS[fmeta.type]}) AS {fname}")
+    flatten = ""
+    if node.list_path:
+        # parity quirk: a list is read by its own name off the top-level
+        # parsed_json, whatever record holds it — kept verbatim
+        flatten = (
+            f" lateral view explode(from_json(parsed_json['{node.list_path[-1]}'],"
+            f" 'array<string>')) AS value"
+        )
     chunk = "" if flatten else " and chunk=0"
-    if parent is None:
-        sql = (
-            f"CREATE OR REPLACE VIEW {q(view_name)} AS\n"
+    if node.is_root:
+        return (
+            f"CREATE OR REPLACE VIEW {q(node.name)} AS\n"
             f"SELECT {', '.join(cols)}\n"
             f"FROM {q(TABLE + '_LATEST')}{flatten}\n"
-            f"WHERE type='{doc_type}'{chunk}"
+            f"WHERE type='{node.doc_type}'{chunk}"
         )
-    else:
-        sql = (
-            f"CREATE OR REPLACE VIEW {q(view_name)} AS\n"
-            f"SELECT {', '.join(cols)}\n"
-            "FROM (\n"
-            f"  SELECT id, deleted, author, version, date, {root}, {parse_clause}\n"
-            f"  FROM {q(TABLE + '_LATEST')}{flatten}\n"
-            f"  WHERE type='{doc_type}'{chunk}\n"
-            ")"
-        )
-    out[view_name] = sql
+    parse_clause = (
+        f"from_json(get_json_object({root}, '{'.'.join(('$', *node.path))}'),"
+        f" 'map<string, string>') AS parsed_data"
+    )
+    return (
+        f"CREATE OR REPLACE VIEW {q(node.name)} AS\n"
+        f"SELECT {', '.join(cols)}\n"
+        "FROM (\n"
+        f"  SELECT id, deleted, author, version, date, {root}, {parse_clause}\n"
+        f"  FROM {q(TABLE + '_LATEST')}{flatten}\n"
+        f"  WHERE type='{node.doc_type}'{chunk}\n"
+        ")"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -478,61 +452,40 @@ ON ed.TYPE = latest.TYPE
    AND ed.ID = latest.ID
    AND ed.VERSION = latest.VERSION"""
     )
-    for doc_type, doc_schema in root.items():
-        _sqlserver_view(out, _check_ident(doc_type), doc_type, doc_schema,
-                        parent=None, data_field="data", root="$", flatten="")
+    for node in checked_forest(root):
+        out[node.name] = _sqlserver_view(node)
     return out
 
 
-def _sqlserver_view(
-    out: dict[str, str],
-    doc_type: str,
-    view_name: str,
-    schema: DocumentSchema,
-    parent: str | None,
-    data_field: str,
-    root: str,
-    flatten: str,
-) -> None:
-    # mirror sqlserver.go:257-354: scalar fields land in one OPENJSON WITH
-    # clause; RECORD recurses on the json path; RECORD LIST recurses through
-    # CROSS APPLY OPENJSON
-    sql_types = {"TEXT": "NVARCHAR(MAX)", "GUID": "NVARCHAR(MAX)",
-                 "UWI": "NVARCHAR(MAX)", "INTEGER": "INT", "DECIMAL": "FLOAT",
-                 "BOOLEAN": "BIT", "DATETIME": "DATETIME2"}
+_SQLSERVER_TYPES = {"TEXT": "NVARCHAR(MAX)", "GUID": "NVARCHAR(MAX)",
+                    "UWI": "NVARCHAR(MAX)", "INTEGER": "INT", "DECIMAL": "FLOAT",
+                    "BOOLEAN": "BIT", "DATETIME": "DATETIME2"}
+
+
+def _sqlserver_view(node: ViewNode) -> str:
+    # mirror sqlserver.go:257-354: the fields land in one OPENJSON WITH
+    # clause on the record's json path; a flattened view reads the CROSS
+    # APPLY OPENJSON ``value`` of its list
+    data_field = "value" if node.list_path else "data"
+    root = ".".join(("$", *node.path))
     with_clauses: list[str] = []
     with_fields: list[str] = []
-    for fname, fmeta in schema.items():
-        if fname in ("DOCUMENT_ID", "LISTITEM_ID"):
-            continue
-        _check_ident(fname)
-        if fmeta.type in SCALAR_TYPES:
-            with_clauses.append(f"[obj_{fname}] {sql_types[fmeta.type]} '$.{fname}'")
-            with_fields.append(fname)
-        elif fmeta.type == T_DOCUMENT:
-            with_clauses.append(
-                f"[obj_{fname}] NVARCHAR(255) '{root}.{fname}.DOCUMENT_ID'"
-            )
-            with_fields.append(fname)
-        elif fmeta.type == T_RECORD:
-            _sqlserver_view(out, doc_type, f"{view_name}_{fname}",
-                            fmeta.record_type or {}, parent=view_name,
-                            data_field=data_field, root=f"{root}.{fname}",
-                            flatten=flatten)
-        elif fmeta.type == T_RECORD_LIST:
-            if data_field == "value":
-                continue  # list-in-list unsupported (sqlserver.go:286-288)
-            _sqlserver_view(out, doc_type, f"{view_name}_{fname}",
-                            fmeta.record_type or {}, parent=view_name,
-                            data_field="value", root="$",
-                            flatten=(f" CROSS APPLY OPENJSON({data_field},"
-                                     f" '{root}.{fname}') AS value"))
-        # unknown types skipped (sqlserver.go:292-294)
+    for fname, fmeta in node.fields:
+        if fname == "LISTITEM_ID":
+            continue  # parity quirk: the reference skips a declared one
+        if fmeta.type == T_DOCUMENT:
+            with_clauses.append(f"[obj_{fname}] NVARCHAR(255) '{root}.{fname}.DOCUMENT_ID'")
+        else:
+            with_clauses.append(f"[obj_{fname}] {_SQLSERVER_TYPES[fmeta.type]} '$.{fname}'")
+        with_fields.append(fname)
+    flatten = ""
+    if node.list_path:
+        flatten = f" CROSS APPLY OPENJSON(data, '{'.'.join(('$', *node.list_path))}') AS value"
 
     cols = ["id as DOCUMENT_ID"]
-    if data_field == "value":
+    if node.list_path:
         cols.append("CAST(JSON_VALUE(value, '$.LISTITEM_ID') as nvarchar) as LISTITEM_ID")
-    if parent is None:
+    if node.is_root:
         cols += ["deleted as [_DELETED]", "author as [_AUTHOR]",
                  "version as [_VERSION]", "date as [_DATE]"]
     select_fields = ", ".join(cols)
@@ -547,12 +500,12 @@ def _sqlserver_view(
     else:
         from_clause = f"{TABLE}_LATEST{flatten}"
     sql = (
-        f"create or alter view [{view_name}] as select {select_fields}"
-        f" from {from_clause} where {TABLE}_LATEST.type='{doc_type}'"
+        f"create or alter view [{node.name}] as select {select_fields}"
+        f" from {from_clause} where {TABLE}_LATEST.type='{node.doc_type}'"
     )
     if not flatten:
         sql += " and chunk=0"
-    out[view_name] = sql
+    return sql
 
 
 DIALECTS = {

@@ -25,14 +25,12 @@ from execute_sync_spark.sinks.base import register_views
 
 
 class ParquetSink:
-    """Columnar-file landing sink; ``file_format`` may be "parquet"
-    (default) or "orc" — both columnar, splittable, predicate-pushdown
-    formats Spark writes natively."""
+    """Parquet landing sink: a columnar, splittable, predicate-pushdown
+    format Spark writes natively."""
 
-    def __init__(self, spark: SparkSession, path: str, file_format: str = "parquet"):
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self.file_format = file_format
 
     def append(self, landed: DataFrame, txn_id: str | None = None) -> int:
         """Append one batch. With ``txn_id`` the append is *effectively-once*:
@@ -67,7 +65,7 @@ class ParquetSink:
             .sortWithinPartitions("id", "version")
         )
         tmp = f"{self.path.rstrip('/')}_stage_{uuid.uuid4().hex[:8]}"
-        clustered.write.mode("overwrite").format(self.file_format).partitionBy("type").save(tmp)
+        clustered.write.mode("overwrite").partitionBy("type").parquet(tmp)
         n = rows.get["n"]
         try:
             for root_dir, _, files in os.walk(tmp):
@@ -104,7 +102,7 @@ class ParquetSink:
         """The landing table, read with its declared schema (no inference
         job); ``type`` comes from the partition directories."""
         return (
-            self.spark.read.schema(LANDING_SCHEMA).format(self.file_format).load(self.path)
+            self.spark.read.schema(LANDING_SCHEMA).parquet(self.path)
             .select(*LANDING_COLUMNS)
         )
 
@@ -115,9 +113,7 @@ class ParquetSink:
     def prune(self) -> int:
         """D3 compaction. The rewrite replaces only ``type=*`` partition
         directories, so the ``_txns/`` markers stay as they are."""
-        return dedup_ops.prune_parquet(
-            self.spark, self.path, file_format=self.file_format, schema=LANDING_SCHEMA
-        )
+        return dedup_ops.prune_parquet(self.spark, self.path, schema=LANDING_SCHEMA)
 
     def compact_files(self, target_mb: int = 128) -> dict[str, int]:
         """Small-file compaction (the Delta OPTIMIZE analog): incremental
@@ -147,14 +143,13 @@ class ParquetSink:
             n_out = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
             if n_out >= len(files):
                 continue
-            df = self.spark.read.format(self.file_format).load(part_dir)
+            df = self.spark.read.parquet(part_dir)
             tmp = f"{part_dir.rstrip('/')}_compact_{uuid.uuid4().hex[:8]}"
             (
                 df.coalesce(n_out)
                 .sortWithinPartitions("id", "version")
                 .write.mode("overwrite")
-                .format(self.file_format)
-                .save(tmp)
+                .parquet(tmp)
             )
             for f in files:
                 os.remove(os.path.join(part_dir, f))

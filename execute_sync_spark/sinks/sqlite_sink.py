@@ -12,13 +12,14 @@ Semantics mirrored (all verified by tests/test_sinks_alt.py):
 - ``prune``: the targeted anti-join ``DELETE ... NOT IN (GROUP BY max)``
   executed in-warehouse (sqlite.go:62-69) — no table rewrite;
 - ``create_views``: SQLite-NATIVE view DDL — ``_LATEST_ALL_VERSIONS`` (D1)
-  and ``_LATEST`` (D2) tuple-IN views (sqlite.go:167-191) plus the recursive
-  per-type json_extract view forest (sqlite.go:200-270): scalar fields via
-  ``json_extract(DATA, '$.F')``, DOCUMENT fields via ``'$.F.DOCUMENT_ID'``,
-  RECORD recursion into ``PARENT_FIELD`` views, RECORD LIST flatten via
-  ``json_each`` across ALL chunk rows (chunk slices re-union), the
-  LISTITEM_ID projection for records-in-lists, list-in-list skipped, and
-  ``chunk = 0`` on every non-flattened view.
+  and ``_LATEST`` (D2) tuple-IN views (sqlite.go:167-191) plus one
+  json_extract view per node of ``schema.model.view_forest``
+  (sqlite.go:200-270): scalar fields via ``json_extract(DATA, '$.F')``,
+  DOCUMENT fields via ``'$.F.DOCUMENT_ID'``, RECORD views on the deeper
+  path, RECORD LIST flatten via ``json_each`` across ALL chunk rows (chunk
+  slices re-union), the LISTITEM_ID projection for records-in-lists, and
+  ``chunk = 0`` on every non-flattened view. The whole forest is validated
+  before any DDL runs.
 
 Timestamps are stored as ISO-8601 TEXT exactly like the reference (SQLite has
 no timestamp type); ``read`` parses them back for Spark.
@@ -37,15 +38,8 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 
 from execute_sync_spark.landing.schema import LANDING_COLUMNS, LANDING_SCHEMA
-from execute_sync_spark.sinks.ddl import _check_ident
-from execute_sync_spark.schema.model import (
-    SCALAR_TYPES,
-    T_DOCUMENT,
-    T_RECORD,
-    T_RECORD_LIST,
-    DocumentSchema,
-    RootSchema,
-)
+from execute_sync_spark.sinks.ddl import checked_forest
+from execute_sync_spark.schema.model import T_DOCUMENT, RootSchema, ViewNode
 
 TABLE = "EXECUTE_DOCUMENTS"
 
@@ -76,6 +70,37 @@ def _iso(ts: datetime | None) -> str | None:
 
 def _from_iso(s: str | None) -> datetime | None:
     return datetime.strptime(s, _ISO) if s else None
+
+
+def _sqlite_view(node: ViewNode) -> str:
+    """One forest view as SQLite DDL (sqlite.go:200-270)."""
+    json_field = "value" if node.list_path else "DATA"
+    json_root = ".".join(("$", *node.path))
+    cols = [f"{TABLE}_LATEST.ID AS DOCUMENT_ID"]
+    if node.list_path and node.path:
+        # record-in-list rows carry their list identity
+        cols.append(f"json_extract({json_field}, '$.LISTITEM_ID') AS LISTITEM_ID")
+    if node.is_root:
+        cols += [
+            'DELETED AS "_DELETED"',
+            'AUTHOR AS "_AUTHOR"',
+            'VERSION AS "_VERSION"',
+            'DATE AS "_DATE"',
+        ]
+    for fname, fmeta in node.fields:
+        ref = ".DOCUMENT_ID" if fmeta.type == T_DOCUMENT else ""
+        cols.append(f"json_extract({json_field}, '{json_root}.{fname}{ref}') AS {fname}")
+    flatten = ""
+    if node.list_path:
+        flatten = f", json_each(DATA, '{'.'.join(('$', *node.list_path))}')"
+    sql = (
+        f"CREATE VIEW {node.name} AS SELECT {', '.join(cols)}"
+        f" FROM {TABLE}_LATEST{flatten}"
+        f" WHERE {TABLE}_LATEST.TYPE = '{node.doc_type}'"
+    )
+    if not flatten:
+        sql += " AND CHUNK = 0"
+    return sql
 
 
 class SqliteSink:
@@ -150,6 +175,9 @@ class SqliteSink:
     def create_views(self, root: RootSchema) -> dict[str, str]:
         """Generate and install the SQLite-native view forest; returns
         {view_name: CREATE VIEW sql} for inspection."""
+        # every schema-sourced name is validated before any DDL runs, so a
+        # hostile schema leaves no half-built forest behind
+        forest = checked_forest(root)
         created: dict[str, str] = {}
         with self._connect() as con:
             con.execute(
@@ -166,79 +194,12 @@ class SqliteSink:
                         SELECT TYPE, ID, MAX(VERSION)
                         FROM {TABLE} GROUP BY TYPE, ID)"""
             )
-            for doc_type, doc_schema in root.items():
-                # doc types / field names come from the externally-fetched
-                # schema and are interpolated into DDL — validate them first
-                # (the reference interpolates raw; a quoted or spaced name
-                # would break or inject SQL in the warehouse)
-                self._create_view(con, created, _check_ident(doc_type), doc_type,
-                                  doc_schema, parent=None, json_field="DATA",
-                                  json_root="$", flatten="")
+            for node in forest:
+                sql = _sqlite_view(node)
+                con.execute(f"DROP VIEW IF EXISTS {node.name}")
+                con.execute(sql)
+                created[node.name] = sql
         return created
-
-    # -- recursive per-type view generator (sqlite.go:200-270) -------------
-
-    def _create_view(
-        self,
-        con: sqlite3.Connection,
-        created: dict[str, str],
-        doc_type: str,
-        view_name: str,
-        schema: DocumentSchema,
-        parent: str | None,
-        json_field: str,
-        json_root: str,
-        flatten: str,
-    ) -> None:
-        cols = [f"{TABLE}_LATEST.ID AS DOCUMENT_ID"]
-        if flatten and json_root != "$":
-            # record-in-list rows carry their list identity
-            cols.append(f"json_extract({json_field}, '$.LISTITEM_ID') AS LISTITEM_ID")
-        if parent is None:
-            cols += [
-                'DELETED AS "_DELETED"',
-                'AUTHOR AS "_AUTHOR"',
-                'VERSION AS "_VERSION"',
-                'DATE AS "_DATE"',
-            ]
-        for fname, fmeta in schema.items():
-            if fname == "DOCUMENT_ID":
-                continue
-            _check_ident(fname)
-            if fmeta.type in SCALAR_TYPES:
-                cols.append(f"json_extract({json_field}, '{json_root}.{fname}') AS {fname}")
-            elif fmeta.type == T_DOCUMENT:
-                cols.append(
-                    f"json_extract({json_field}, '{json_root}.{fname}.DOCUMENT_ID') AS {fname}"
-                )
-            elif fmeta.type == T_RECORD:
-                self._create_view(
-                    con, created, doc_type, f"{view_name}_{fname}",
-                    fmeta.record_type or {}, parent=view_name,
-                    json_field=json_field, json_root=f"{json_root}.{fname}",
-                    flatten=flatten,
-                )
-            elif fmeta.type == T_RECORD_LIST:
-                if json_field != "DATA":
-                    continue  # list-in-list unsupported (sqlite.go:236-240)
-                self._create_view(
-                    con, created, doc_type, f"{view_name}_{fname}",
-                    fmeta.record_type or {}, parent=view_name,
-                    json_field="value", json_root="$",
-                    flatten=f", json_each(DATA, '{json_root}.{fname}')",
-                )
-            # unknown types skipped (sqlite.go:242-243)
-
-        sql = (
-            f"CREATE VIEW {view_name} AS SELECT {', '.join(cols)}"
-            f" FROM {TABLE}_LATEST{flatten}"
-            f" WHERE {TABLE}_LATEST.TYPE = '{doc_type}'"
-        )
-        if not flatten:
-            sql += " AND CHUNK = 0"
-        con.execute(f"DROP VIEW IF EXISTS {view_name}")
-        con.execute(sql)
-        created[view_name] = sql
 
     # -- convenience for tests / CLI ---------------------------------------
 

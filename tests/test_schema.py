@@ -4,7 +4,7 @@ from execute_sync_spark.schema import (
     doc_type_struct,
     filter_inactive,
 )
-from execute_sync_spark.schema.model import filter_calcs
+from execute_sync_spark.schema.model import filter_calcs, parse_root_schema
 
 
 def test_scalar_and_special_types(root_schema):
@@ -43,6 +43,16 @@ def test_nested_record_and_list(root_schema):
     assert "NOTE" in item_names
 
 
+def _nested(flag: dict) -> dict:
+    """A doc type whose RECORD and RECORD LIST item each hold one field
+    carrying ``flag`` beside a plain one."""
+    fields = {"KEEP": {"TYPE": "TEXT"}, "DROP": {"TYPE": "TEXT", **flag}}
+    return parse_root_schema({"T": {
+        "R": {"TYPE": "RECORD", "RECORD_TYPE": fields},
+        "L": {"TYPE": "RECORD LIST", "RECORD_TYPE": fields},
+    }})
+
+
 def test_filter_inactive(root_schema):
     filtered = filter_inactive(root_schema)
     assert "RETIRED_FLD" in root_schema["AFE"]
@@ -50,8 +60,20 @@ def test_filter_inactive(root_schema):
     # original untouched, actives kept
     assert "AFE_NUMBER" in filtered["AFE"]
 
+    root = _nested({"ACTIVE": False})
+    filtered = filter_inactive(root)
+    for rec in ("R", "L"):
+        assert list(filtered["T"][rec].record_type) == ["KEEP"]
+        assert list(root["T"][rec].record_type) == ["KEEP", "DROP"]
+
 
 def test_filter_calcs(root_schema):
     filtered = filter_calcs(root_schema)
     assert "EST_TOTAL" in root_schema["AFE"]
     assert "EST_TOTAL" not in filtered["AFE"]
+
+    root = _nested({"FORMULA": "1 + 1"})
+    filtered = filter_calcs(root)
+    for rec in ("R", "L"):
+        assert list(filtered["T"][rec].record_type) == ["KEEP"]
+        assert list(root["T"][rec].record_type) == ["KEEP", "DROP"]

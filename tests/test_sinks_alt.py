@@ -1,10 +1,8 @@
-"""Alternative warehouse sinks: DuckDB (real SQL warehouse, row-sink parity)
-and ORC file format."""
-
-from pyspark.sql import functions as F
+"""Alternative warehouse sinks: DuckDB (real SQL warehouse, row-sink
+parity), stdlib SQLite and JDBC."""
 
 from execute_sync_spark.landing import land_ndjson_lines
-from execute_sync_spark.sinks import DuckDBSink, JdbcSink, ParquetSink
+from execute_sync_spark.sinks import DuckDBSink, JdbcSink
 from execute_sync_spark.sources import FileFeedSource, WatermarkStore, sync_once
 from tests.fixtures import feed
 
@@ -132,18 +130,6 @@ def test_sqlite_sink_end_to_end(spark, tmp_path):
     }
 
 
-def test_orc_sink_roundtrip(spark, tmp_path):
-    sink = ParquetSink(spark, str(tmp_path / "wh_orc"), file_format="orc")
-    for lines, bd in zip(feed.batch_lines(), feed.BATCH_DATES):
-        sink.append(land_ndjson_lines(spark, lines, bd, chunk_size=feed.CHUNK_SIZE))
-    assert sink.read().count() == 14
-    assert sink.prune() == 1
-    assert sink.read().count() == 13
-    # partitioned layout preserved, typed reads work
-    afe = sink.read().filter(F.col("type") == "AFE")
-    assert afe.count() == 6
-
-
 def test_sqlite_append_bounded_batches(spark, tmp_path):
     """Driver memory for the embedded sink is bounded by batch_rows:
     toLocalIterator + chunked executemany must land every row (and stay
@@ -175,6 +161,16 @@ def test_sqlite_views_reject_unsafe_schema_identifiers(spark, tmp_path):
     bad = parse_root_schema({"AFE": {"BAD FIELD": {"TYPE": "TEXT"}}})
     with pytest.raises(ValueError, match="unsafe identifier"):
         sink.create_views(bad)
+
+    # the whole forest is validated before any DDL runs: a bad name nested
+    # in a later doc type leaves no view behind, not even the good ones
+    half = parse_root_schema({
+        "GOOD": {"A": {"TYPE": "TEXT"}},
+        "T": {"R": {"TYPE": "RECORD", "RECORD_TYPE": {"BAD NAME": {"TYPE": "TEXT"}}}},
+    })
+    with pytest.raises(ValueError, match="unsafe identifier"):
+        sink.create_views(half)
+    assert sink.query("SELECT name FROM sqlite_master WHERE type = 'view'") == []
 
 
 def test_jdbc_sink_views_and_prune(spark, tmp_path, monkeypatch):

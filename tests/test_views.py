@@ -195,3 +195,31 @@ def test_list_in_list_skipped_with_warning(spark, caplog):
     assert any("list-in-list" in r.message for r in caplog.records)
     pads = {(r.DOCUMENT_ID, r.LISTITEM_ID, r.PAD_NAME) for r in views["WELL_PADS"].collect()}
     assert pads == {("w-1", "p1", "A"), ("w-1", "p2", "B")}
+
+
+def test_declared_listitem_id_is_projected_once(spark):
+    """A schema may declare LISTITEM_ID inside a RECORD LIST. The list's
+    struct and its flattened view carry it once — the item's own id — instead
+    of a second field that makes every read of LISTITEM_ID ambiguous."""
+    import json as _json
+    from datetime import datetime, timezone
+
+    from execute_sync_spark.landing import land_ndjson_lines
+    from execute_sync_spark.schema.model import parse_root_schema
+
+    root = parse_root_schema({"T": {"L": {"TYPE": "RECORD LIST", "RECORD_TYPE": {
+        "LISTITEM_ID": {"TYPE": "TEXT"},
+        "A": {"TYPE": "TEXT"},
+        "R": {"TYPE": "RECORD", "RECORD_TYPE": {"B": {"TYPE": "TEXT"}}},
+    }}}})
+    doc = {"$TYPE": "T", "DOCUMENT_ID": "t-1", "$VERSION": 1, "$AUTHOR_ID": "u",
+           "$DATE": "2026-03-01T00:00:00Z",
+           "L": [{"LISTITEM_ID": "i1", "A": "a1", "R": {"B": "b1"}},
+                 {"LISTITEM_ID": "i2", "A": "a2", "R": {"B": "b2"}}]}
+    landing = land_ndjson_lines(spark, [_json.dumps(doc)], datetime(2026, 3, 1, tzinfo=timezone.utc))
+    views = create_views(latest(landing), root, register=False)
+    assert views["T_L"].columns == ["DOCUMENT_ID", "LISTITEM_ID", "A"]
+    assert {tuple(r) for r in views["T_L"].select("LISTITEM_ID", "A").collect()} == {
+        ("i1", "a1"), ("i2", "a2")}
+    assert {tuple(r) for r in views["T_L_R"].select("LISTITEM_ID", "B").collect()} == {
+        ("i1", "b1"), ("i2", "b2")}

@@ -167,6 +167,15 @@ def test_unsafe_schema_identifiers_rejected():
     evil = parse_root_schema({"X'; DROP TABLE EXECUTE_DOCUMENTS;--": {}})
     with pytest.raises(ValueError, match="unsafe identifier"):
         ddl.sqlserver_views(evil)
+    # a bad name nested in a RECORD, and a bad RECORD LIST name, in every dialect
+    nested = parse_root_schema(
+        {"T": {"R": {"TYPE": "RECORD", "RECORD_TYPE": {"A B": {"TYPE": "TEXT"}}}}})
+    bad_list = parse_root_schema(
+        {"T": {"L'X": {"TYPE": "RECORD LIST", "RECORD_TYPE": {"A": {"TYPE": "TEXT"}}}}})
+    for views in (ddl.snowflake_views, ddl.databricks_views, ddl.sqlserver_views):
+        for root in (nested, bad_list):
+            with pytest.raises(ValueError, match="unsafe identifier"):
+                views(root)
 
 
 def test_databricks_views_execute_in_spark(spark):
